@@ -15,7 +15,6 @@ equivalent here — JVM-side, codegen-friendly, null-safe. Submodules:
 from datapipelinedemo_spark.functions.cleaning import (  # noqa: F401
     clean_timestamp,
     parse_timestamp_date,
-    date_parts,
     parse_human_number,
     log2_bucket,
     keyword_from_url,

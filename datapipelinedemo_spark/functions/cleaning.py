@@ -42,14 +42,6 @@ def parse_timestamp_date(c) -> Column:
     return F.try_to_date(_col(c), "MMM d yyyy")
 
 
-def date_parts(c) -> dict[str, Column]:
-    """F3 — Year/Month/Quarter extraction (demo.py:71-73). The reference
-    misspells the quarter column ``Qurter``; we keep the data, fix the name.
-    """
-    c = _col(c)
-    return {"Year": F.year(c), "Month": F.month(c), "Quarter": F.quarter(c)}
-
-
 def parse_human_number(c) -> Column:
     """F4 — ``"1.2K"→1200``, ``"3M"→3000000``, plain numerics pass
     through, anything unparseable→0 (demo.py:38-47 bare ``except→0``).

@@ -21,8 +21,7 @@ Native rebuild (the scale path, SURVEY.md §2.3 F8b):
 
 Everything is DataFrame ops: one broadcast hash join (pattern table is
 a few MB — far under the broadcast threshold) + one groupBy over the
-matches. No Python touches row data. A spaCy fidelity path is gated
-behind ``HAVE_SPACY`` for environments that have the model installed.
+matches. No Python touches row data.
 """
 
 from __future__ import annotations
@@ -52,13 +51,6 @@ TOKEN_RE = r"[a-z0-9_']+|[^a-z0-9_'\s]"
 # demo.py:28-29); lower() of these tokens equals TOKEN_RE over
 # lower(text) for ASCII input.
 TOKEN_RE_CASED = r"[A-Za-z0-9_']+|[^A-Za-z0-9_'\s]"
-
-try:  # fidelity path — not installed in this container
-    import spacy  # noqa: F401
-
-    HAVE_SPACY = True
-except Exception:
-    HAVE_SPACY = False
 
 PATTERN_SCHEMA = T.StructType(
     [
@@ -119,9 +111,8 @@ def extract_phrases(
     text_col: str,
     patterns: DataFrame,
     id_col: str,
-    out_col: str = "All_phrases",
 ) -> DataFrame:
-    """Add ``out_col``: array<string> of matched phrase ids (entity_ruler
+    """Add ``All_phrases``: array<string> of matched phrase ids (entity_ruler
     semantics, see module docstring), ``["empty"]`` if none.
 
     ``id_col`` must uniquely identify rows (used to reattach results).
@@ -202,7 +193,7 @@ def extract_phrases(
         df.join(kept, df[id_col] == kept["__ner_rid"], "left")
         .drop("__ner_rid")
         .withColumn(
-            out_col,
+            "All_phrases",
             F.coalesce(F.col("__phrases"), F.array(F.lit("empty"))),
         )
         .drop("__phrases")

@@ -16,9 +16,7 @@ default lexicon carries pattern.en polarities); intensifier phrases
 negated phrases ("not good") differ by ~1.2 (the lost sign flip,
 TextBlob's ×-0.5 rule), ~1.04 when negation wraps an intensifier;
 ~0.48 overall on that modifier-heavy vector set. The lexicon is
-injectable, so tests pin exact values. The TextBlob fidelity path is
-gated behind ``HAVE_TEXTBLOB`` as an Arrow-batched pandas UDF (never
-row-at-a-time).
+injectable, so tests pin exact values.
 """
 
 from __future__ import annotations
@@ -27,12 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-try:  # fidelity path — not installed in this container
-    from textblob import TextBlob  # noqa: F401
-
-    HAVE_TEXTBLOB = True
-except Exception:
-    HAVE_TEXTBLOB = False
+from datapipelinedemo_spark.functions.stable import dec_sum
 
 LEXICON_SCHEMA = T.StructType(
     [
@@ -60,13 +53,9 @@ def lexicon_table(
 
 
 def score_sentiment(
-    df: DataFrame,
-    text_col: str,
-    lexicon: DataFrame,
-    id_col: str,
-    out_col: str = "Sentiment",
+    df: DataFrame, text_col: str, lexicon: DataFrame, id_col: str
 ) -> DataFrame:
-    """Add ``out_col``: mean lexicon polarity of the row's tokens
+    """Add ``Sentiment``: mean lexicon polarity of the row's tokens
     (every occurrence counts, like PatternAnalyzer), 0.0 when no
     lexicon token appears. One broadcast join + one groupBy.
 
@@ -81,13 +70,12 @@ def score_sentiment(
             F.split(F.lower(F.col(text_col)), r"[^a-z0-9']+")
         ).alias("__tok"),
     ).filter(F.col("__tok") != "")
-    snapped = F.floor(F.col("polarity") * 1000000.0 + 0.5).cast("long")
     scored = (
         toks.join(F.broadcast(lexicon), toks["__tok"] == lexicon["token"])
         .groupBy("__rid")
         .agg(
             (
-                (F.sum(snapped).cast("double") / F.lit(1000000.0))
+                dec_sum("polarity", "__sum", scale=6)
                 / F.count(F.lit(1)).cast("double")
             ).alias("__sent")
         )
@@ -96,26 +84,6 @@ def score_sentiment(
     return (
         df.join(scored, df[id_col] == scored["__sent_rid"], "left")
         .drop("__sent_rid")
-        .withColumn(
-            out_col,
-            F.coalesce(F.col("__sent"), F.lit(0.0)),
-        )
+        .withColumn("Sentiment", F.coalesce(F.col("__sent"), F.lit(0.0)))
         .drop("__sent")
     )
-
-
-def textblob_sentiment(df: DataFrame, text_col: str, out_col: str) -> DataFrame:
-    """Fidelity path: TextBlob polarity via Arrow-batched pandas UDF.
-    Raises if TextBlob is unavailable (this container)."""
-    if not HAVE_TEXTBLOB:
-        raise NotImplementedError("textblob is not installed in this environment")
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("float")
-    def _polarity(s: pd.Series) -> pd.Series:
-        from textblob import TextBlob
-
-        return s.fillna("").map(lambda t: TextBlob(t).sentiment.polarity)
-
-    return df.withColumn(out_col, _polarity(F.col(text_col)))

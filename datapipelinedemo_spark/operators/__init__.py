@@ -1,12 +1,17 @@
 """Composable DataFrame operators.
 
-- ``aggregates`` — the reference's four aggregation pipelines (A1–A4)
-  as partial-agg-friendly groupBy plans, plus the explicit-values pivot.
-- ``pairs``      — intra-row ordered pair expansion (F16) via posexplode
-  self-join, AQE-skew-aware.
+- ``pairs``      — intra-row ordered pair expansion (F16): an in-row
+  array expression and one explode, no self-join and no shuffle.
 - ``asof``       — as-of (most-recent-match) joins.
+- ``rangejoin``  — interval-containment joins.
 - ``dedup``      — exact, MinHash-LSH, SimHash, n-gram Jaccard and
-  embedding-cosine near-duplicate detection.
+  embedding-cosine near-duplicate detection; ``cluster`` resolves the
+  surviving pairs into connected components.
 - ``similarity`` — brute-force and LSH-bucketed cosine top-k search.
-- ``topk``       — window-based per-group top-k.
+- ``neardup_index``, ``ann_index`` — write-once signature indexes, both
+  committed and read through ``write_once``.
+- ``fuzzy``, ``decontamination``, ``diff``, ``sampling``, ``sketch``,
+  ``skew``, ``prefix`` — edit-distance joins, benchmark n-gram overlap,
+  snapshot diff, deterministic sampling, count-min sketch, key salting
+  and bucketed prefix sums.
 """

@@ -6,19 +6,20 @@ Reference flow (demo.py): CSV scan → ~20 row-at-a-time UDF enrichments
 
 Rebuild: one declarative enrichment (every F1–F10 as native
 expressions, NER + sentiment as broadcast joins), ``.cache()``d once,
-then four groupBy/pivot plans that share it. Each aggregation is a
-partial-agg HashAggregate; pivots get explicit chronologically-sorted
-values (no hidden distinct job); weights fold into SUMs (the reference
+then four tables built by one ``_table`` shape: group by (Year, Month,
+keys), collect the month labels (one small distinct job per table),
+pivot on them, add ``Category1``. Weights fold into SUMs (the reference
 materializes weight-repeated arrays, F11 — never needed).
 
 Output schemas match the golden CSV headers
 (Frequency_monthly_demo.csv etc.): key cols + ``<Prefix>_<Y>-<M>``
-month columns (month not zero-padded) + constant ``Category1``.
+month columns (month not zero-padded, sorted as strings) + constant
+``Category1``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from datapipelinedemo_spark.pin import pin
 
@@ -27,36 +28,26 @@ from datapipelinedemo_spark.functions.cleaning import (
     keyword_from_url,
     keyword_to_category,
     log2_bucket,
+    month_label,
     parse_human_number,
     parse_timestamp_date,
 )
 from datapipelinedemo_spark.functions.ner import extract_phrases
 from datapipelinedemo_spark.functions.sentiment import score_sentiment
+from datapipelinedemo_spark.functions.stable import dec_sum
+from datapipelinedemo_spark.operators import pairs
+
+# enrichment columns every table reads besides the phrases
+_CARRY = ["Year", "Month", "Category2", "Likes_log", "Retweets_log", "Sentiment"]
 
 
-def enrich(
-    tweets: DataFrame,
-    patterns: DataFrame,
-    lexicon: DataFrame,
-    sample_n: int | None = None,
-    seed: int = 42,
-    cache: bool = True,
-) -> DataFrame:
-    """E1 — the shared enrichment prefix (demo.py:50-187), one pass.
-
-    ``sample_n`` reproduces the reference's P1 random-sample-then-limit
-    (demo.py:55,59) but SEEDED; pass None to process everything (the
-    reference's unseeded global sort made its golden outputs
-    unreproducible — quarantined here, SURVEY.md §5).
-    """
-    df = tweets.filter(F.col("Timestamp").isNotNull())
-    if sample_n is not None:
-        df = df.orderBy(F.rand(seed)).limit(sample_n)
-
+def enrich(tweets: DataFrame, patterns: DataFrame, lexicon: DataFrame) -> DataFrame:
+    """E1 — the shared enrichment prefix (demo.py:50-187), one pass,
+    cached. A null or unparseable ``Timestamp`` drops the row at the
+    ``TweetDate`` filter; null counts parse to 0."""
     df = (
-        df.withColumn("TweetDate", parse_timestamp_date(clean_timestamp("Timestamp")))
+        tweets.withColumn("TweetDate", parse_timestamp_date(clean_timestamp("Timestamp")))
         .filter(F.col("TweetDate").isNotNull())
-        .fillna("0", subset=["Comments", "Likes", "Retweets"])
         .withColumn("Comments", parse_human_number("Comments"))
         .withColumn("Likes", parse_human_number("Likes"))
         .withColumn("Retweets", parse_human_number("Retweets"))
@@ -85,12 +76,11 @@ def enrich(
     # (lineage truncation: retries and both join branches reread the
     # same blocks instead of regenerating ids). Lazy: first action pays.
     df = df.transform(pin)  # pin-bounded: tweets demo-fixture grain; materialization REQUIRED for monotonically_increasing_id stability (correctness, not perf)
-    df = extract_phrases(df, "Text", patterns, "__rid", out_col="All_phrases")
+    df = extract_phrases(df, "Text", patterns, "__rid")
     # CheckEmpty != 1 (demo.py:157's intended semantics): drop sentinel rows
     df = df.filter(F.col("All_phrases") != F.array(F.lit("empty")))
-    df = score_sentiment(df, "Text", lexicon, "__rid", out_col="Sentiment")
-    df = df.drop("__rid")
-    return df.cache() if cache else df
+    df = score_sentiment(df, "Text", lexicon, "__rid")
+    return df.drop("__rid").cache()
 
 
 def _month_labels(df: DataFrame, prefix: str) -> list[str]:
@@ -107,61 +97,46 @@ def _month_labels(df: DataFrame, prefix: str) -> list[str]:
     return sorted(f"{prefix}_{y}-{m}" for y, m in ym)
 
 
-def _pivot(
-    long: DataFrame, keys: list[str], prefix: str, value_col: str, labels: list[str]
-) -> DataFrame:
-    wide = (
-        long.withColumn(
-            "__label",
-            F.concat(
-                F.lit(prefix + "_"),
-                F.col("Year").cast("string"),
-                F.lit("-"),
-                F.col("Month").cast("string"),
-            ),
-        )
-        .groupBy(*keys)
-        .pivot("__label", labels)
-        .max(value_col)
-        .fillna(0)
-    )
-    return wide.withColumn("Category1", F.lit("Beverage")).select(
-        *keys, *labels, "Category1"
-    )
-
-
-def _explode_topics(enriched: DataFrame) -> DataFrame:
+def _topics(enriched: DataFrame) -> DataFrame:
+    """One row per (tweet, phrase)."""
     return enriched.select(
-        "Year",
-        "Month",
-        "Category2",
-        "Likes_log",
-        "Retweets_log",
-        "Sentiment",
-        F.explode("All_phrases").alias("Topic"),
+        *_CARRY, F.explode("All_phrases").alias("Topic")
     ).filter(F.col("Topic") != "empty")
 
 
-def _explode_topic_pairs(enriched: DataFrame) -> DataFrame:
-    from datapipelinedemo_spark.operators.pairs import explode_pairs
+def _topic_pairs(enriched: DataFrame) -> DataFrame:
+    """One row per (tweet, ordered phrase pair)."""
+    return pairs.explode_pairs(
+        enriched, "All_phrases", out1="Topic", out2="Topic2", keep=_CARRY
+    ).filter((F.col("Topic") != "empty") & (F.col("Topic2") != "empty"))
 
-    base = enriched.select(
-        "Year",
-        "Month",
-        "Category2",
-        "Likes_log",
-        "Retweets_log",
-        "Sentiment",
-        "All_phrases",
+
+def _smoothed_sentiment() -> Column:
+    """Σ(Sentiment·(Likes_log+1)) / (Σ Likes_log + 1) — numerator weights
+    every tweet, denominator smooths once per group (demo.py:255-306).
+    The numerator is a fixed-point sum: order-independent and
+    oracle-reproducible (see functions.stable)."""
+    num = dec_sum(F.col("Sentiment") * (F.col("Likes_log") + 1), "num", scale=6)
+    return num / (F.sum("Likes_log") + F.lit(1)).cast("double")
+
+
+def _table(
+    rows: DataFrame, keys: list[str], prefix: str, value: Column, order: list[str]
+) -> DataFrame:
+    """Aggregate ``value`` per (Year, Month, *keys), then pivot the months
+    into ``<prefix>_<Y>-<M>`` columns, in ``order`` key-column order."""
+    long = rows.groupBy("Year", "Month", *keys).agg(value.alias("val"))
+    labels = _month_labels(long, prefix)
+    wide = (
+        long.withColumn("__label", month_label(prefix, "Year", "Month"))
+        .groupBy(*order)
+        .pivot("__label", labels)
+        .max("val")
+        .fillna(0)
     )
-    pairs = explode_pairs(
-        base,
-        "All_phrases",
-        out1="Topic",
-        out2="Topic2",
-        keep=["Year", "Month", "Category2", "Likes_log", "Retweets_log", "Sentiment"],
+    return wide.withColumn("Category1", F.lit("Beverage")).select(
+        *order, *labels, "Category1"
     )
-    return pairs.filter((F.col("Topic") != "empty") & (F.col("Topic2") != "empty"))
 
 
 def frequency_monthly(enriched: DataFrame) -> DataFrame:
@@ -169,91 +144,50 @@ def frequency_monthly(enriched: DataFrame) -> DataFrame:
     Σ_tweets (Retweets_log + 1). Weight folded into the SUM (the
     reference repeats the phrase array weight+1 times then FreqDists
     it, demo.py:180-213)."""
-    long = _explode_topics(enriched).groupBy(
-        "Year", "Month", "Category2", "Topic"
-    ).agg(F.sum(F.col("Retweets_log") + 1).alias("val"))
-    labels = _month_labels(long, "Frequency")
-    return _pivot(long, ["Topic", "Category2"], "Frequency", "val", labels)
+    return _table(
+        _topics(enriched),
+        ["Category2", "Topic"],
+        "Frequency",
+        F.sum(F.col("Retweets_log") + 1),
+        ["Topic", "Category2"],
+    )
 
 
 def sentiments_monthly(enriched: DataFrame) -> DataFrame:
-    """A2 — smoothed weighted mean sentiment per phrase:
-    Σ(Sentiment·(Likes_log+1)) / (Σ Likes_log + 1) — numerator weights
-    every tweet, denominator smooths once per group (demo.py:255-306)."""
-    long = (
-        _explode_topics(enriched)
-        .groupBy("Year", "Month", "Category2", "Topic")
-        .agg(
-            (
-                # fixed-point-snapped numerator: order-independent and
-                # oracle-reproducible (see functions.stable)
-                (
-                    F.sum(
-                        F.floor(
-                            F.col("Sentiment")
-                            * (F.col("Likes_log") + 1)
-                            * F.lit(1000000.0)
-                            + F.lit(0.5)
-                        ).cast("long")
-                    ).cast("double")
-                    / F.lit(1000000.0)
-                )
-                / (F.sum("Likes_log") + F.lit(1)).cast("double")
-            ).alias("val")
-        )
+    """A2 — smoothed weighted mean sentiment per phrase."""
+    return _table(
+        _topics(enriched),
+        ["Category2", "Topic"],
+        "Sentiment",
+        _smoothed_sentiment(),
+        ["Topic", "Category2"],
     )
-    labels = _month_labels(long, "Sentiment")
-    return _pivot(long, ["Topic", "Category2"], "Sentiment", "val", labels)
 
 
 def frequency_2d_monthly(enriched: DataFrame) -> DataFrame:
     """A4 — pair frequency: per (Topic, Topic2, Category2, month),
     1 + Σ_tweets Retweets_log (asymmetric smoothing vs A1 — the
     reference's setdefault(pair, 1) fold, demo.py:436-442)."""
-    long = (
-        _explode_topic_pairs(enriched)
-        .groupBy("Year", "Month", "Category2", "Topic", "Topic2")
-        .agg((F.lit(1) + F.sum("Retweets_log")).alias("val"))
+    return _table(
+        _topic_pairs(enriched),
+        ["Category2", "Topic", "Topic2"],
+        "Frequency",
+        F.lit(1) + F.sum("Retweets_log"),
+        ["Topic", "Topic2", "Category2"],
     )
-    labels = _month_labels(long, "Frequency")
-    return _pivot(long, ["Topic", "Topic2", "Category2"], "Frequency", "val", labels)
 
 
 def sentiment2d_monthly(enriched: DataFrame) -> DataFrame:
     """A3 — pair smoothed sentiment (golden column order:
     Category2, Topic, Topic2, months…, Category1)."""
-    long = (
-        _explode_topic_pairs(enriched)
-        .groupBy("Year", "Month", "Category2", "Topic", "Topic2")
-        .agg(
-            (
-                # fixed-point-snapped numerator: order-independent and
-                # oracle-reproducible (see functions.stable)
-                (
-                    F.sum(
-                        F.floor(
-                            F.col("Sentiment")
-                            * (F.col("Likes_log") + 1)
-                            * F.lit(1000000.0)
-                            + F.lit(0.5)
-                        ).cast("long")
-                    ).cast("double")
-                    / F.lit(1000000.0)
-                )
-                / (F.sum("Likes_log") + F.lit(1)).cast("double")
-            ).alias("val")
-        )
-    )
-    labels = _month_labels(long, "Sentiment")
-    return _pivot(long, ["Category2", "Topic", "Topic2"], "Sentiment", "val", labels)
+    keys = ["Category2", "Topic", "Topic2"]
+    return _table(_topic_pairs(enriched), keys, "Sentiment", _smoothed_sentiment(), keys)
 
 
-def run_all(
-    tweets: DataFrame, patterns: DataFrame, lexicon: DataFrame, **enrich_kw
-) -> dict[str, DataFrame]:
+def run_all(tweets: DataFrame, patterns: DataFrame, lexicon: DataFrame) -> dict[str, DataFrame]:
     """All four outputs off ONE cached enrichment (the reference
     recomputes the whole prefix per output — 4 full passes)."""
-    e = enrich(tweets, patterns, lexicon, **enrich_kw)
+    e = enrich(tweets, patterns, lexicon)
     return {
         "frequency_monthly": frequency_monthly(e),
         "sentiments_monthly": sentiments_monthly(e),

@@ -2,18 +2,17 @@
 
 The reference collects every output to the driver via ``toPandas()``
 and writes with pandas (demo.py:234,324,430,492). Distributed sink:
-``DataFrameWriter.csv``; ``single_file=True`` coalesces to one
-partition for golden-file-shaped outputs (fine for pivot tables —
-they are small by construction; never do this for fact data)."""
+``DataFrameWriter.csv``, coalesced to one partition for
+golden-file-shaped outputs (fine for pivot tables — they are small by
+construction; never do this for fact data)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
 
-def write_csv(df: DataFrame, path: str, single_file: bool = True) -> None:
-    out = df.coalesce(1) if single_file else df
-    out.write.mode("overwrite").option("header", True).csv(path)
+def write_csv(df: DataFrame, path: str) -> None:
+    df.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
 
 
 def write_parquet(

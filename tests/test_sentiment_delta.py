@@ -82,11 +82,7 @@ def test_vectors_match_live_textblob():
     """When TextBlob exists, the committed expectations must be its
     actual outputs — guards the fixture against drift from the real
     library in environments that have it."""
-    from datapipelinedemo_spark.functions.sentiment import HAVE_TEXTBLOB
-
-    if not HAVE_TEXTBLOB:
-        pytest.skip("textblob not installed in this container")
-    from textblob import TextBlob
+    TextBlob = pytest.importorskip("textblob").TextBlob
 
     for v in _vectors():
         got = TextBlob(v["text"]).sentiment.polarity

@@ -191,6 +191,23 @@ def _oracle_a2():
     }
 
 
+def _oracle_a3():
+    num, den = {}, {}
+    for row in _oracle_rows():
+        ph = row["phrases"]
+        for i in range(len(ph)):
+            for j in range(i + 1, len(ph)):
+                key = (row["cat"], ph[i], ph[j])
+                lab = f"Sentiment_{row['year']}-{row['month']}"
+                num.setdefault(key, {}).setdefault(lab, 0.0)
+                den.setdefault(key, {}).setdefault(lab, 0)
+                num[key][lab] += row["sent"] * (row["likes_log"] + 1)
+                den[key][lab] += row["likes_log"]
+    return {
+        k: {lab: num[k][lab] / (den[k][lab] + 1) for lab in num[k]} for k in num
+    }
+
+
 def _oracle_a4():
     agg = {}
     for row in _oracle_rows():
@@ -210,7 +227,7 @@ def outputs(spark):
     tweets = spark.createDataFrame(ROWS, TWEET_SCHEMA)
     patterns = pattern_table_from_rows(spark, PATTERNS)
     lexicon = lexicon_table(spark, LEXICON)
-    return TW.run_all(tweets, patterns, lexicon, cache=True)
+    return TW.run_all(tweets, patterns, lexicon)
 
 
 def _wide_to_dict(df, keys):
@@ -233,6 +250,18 @@ def test_frequency_monthly_matches_oracle(outputs):
 def test_sentiments_monthly_matches_oracle(outputs):
     got = _wide_to_dict(outputs["sentiments_monthly"], ["Topic", "Category2"])
     exp = _oracle_a2()
+    assert set(got) == set(exp)
+    for k in exp:
+        for lab, v in exp[k].items():
+            assert got[k].get(lab, 0.0) == pytest.approx(v, abs=1e-6), (k, lab)
+
+
+def test_sentiment2d_matches_oracle(outputs):
+    got = _wide_to_dict(
+        outputs["sentiment2d_monthly"], ["Category2", "Topic", "Topic2"]
+    )
+    exp = _oracle_a3()
+    assert exp  # the fixture has tweets with two or more phrases
     assert set(got) == set(exp)
     for k in exp:
         for lab, v in exp[k].items():
@@ -328,3 +357,43 @@ def test_ner_semantics(spark):
     assert set(out[2]) == {"Ginger Ale", "Ginger"}
     assert out[3] == ["empty"]
     assert out[4] == ["tonic"]  # no ent_id → surface form, deduped
+
+
+def test_benchmark_tracer_spans_every_layer(spark):
+    """The benchmark's traced mode (perfbench/layertrace.py) swaps
+    ``plans.tweets`` and ``operators.pairs`` functions by name; a rename
+    there would silently empty its per-layer metrics. Every layer must
+    still produce its spans."""
+    import collections
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "perfbench"))
+    import layertrace
+
+    tracer = layertrace.Tracer(spark, 0)
+    tweets = spark.createDataFrame(ROWS, TWEET_SCHEMA)
+    try:
+        with tracer.patched():
+            TW.run_all(
+                tweets,
+                pattern_table_from_rows(spark, PATTERNS),
+                lexicon_table(spark, LEXICON),
+            )
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+        spark.sparkContext.setLocalProperty("spark.job.description", None)
+    got = collections.Counter(s["name"] for s in tracer.spans)
+    tables = ["frequency_monthly", "sentiments_monthly",
+              "sentiment2d_monthly", "frequency_2d_monthly"]
+    assert got == {
+        "plans.tweets.enrich": 1,
+        "functions.cleaning": 1,
+        "pin": 1,
+        "functions.ner": 1,
+        "functions.sentiment": 1,
+        **{f"plans.tweets.{t}": 1 for t in tables},
+        **{f"plans.tweets.{t}.long": 1 for t in tables},
+        "plans.tweets._month_labels": 4,
+        "operators.pairs": 2,
+    }
