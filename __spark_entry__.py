@@ -66,30 +66,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver's correctness snapshot certifies queries() entries in
-# iteration order with a bounded budget (observed: exactly the first 50
-# every round). Freshness entering r16, computed from
-# CORRECTNESS_r01..r15 (latest GREEN driver row per entry): 50 r15 /
-# 45 r14 / 38 r13 / 43 r12 / 45 r11 / 46 r10; zero non-green latest
-# rows, zero never-certified entries — the r8/r9 tail cleared in r15.
-# Round-16 window (50), generated by tools/gen_priority.py --changed:
-# the 2 NEW entries (image_header_dimensions — real PNG/JPEG/GIF/BMP
-# header parsing closing the multimodal decode seam for
-# dimensions/format, VERDICT r15 next #7 — and media_container_info,
-# its audio/video twin: WAV RIFF chunk walk + MP4 ISO-BMFF box walk,
-# planted-parameter oracle), then the 3 changed-plan
-# entries — minhash_estimate_error (no query-time signing at all: both
-# pair branches now scan the write-once (doc, sig) signature index;
-# kills the corpus-fraction broadcast + wide pin VERDICT r15 #1
-# flagged), lsh_band_planner (served from the same signature artifact
-# instead of re-folding 32 hashes per session), and
-# clean_corpus_after_decontamination (dropped the F.broadcast hint on
-# the corpus-fraction contaminated-doc set — the distinct-on-id shape
-# the tightened broadcast gate now flags; AQE decides at runtime) —
-# then 45 of the 46 remaining r10-vintage rows, filling 50. The one
-# r10 row that no longer fits (wordpiece_trained_token_counts,
-# alphabetically last) heads the r17 rotation with the 45 r11 rows —
-# a NEW entry left out of the window would be worse (never
-# driver-certified beats one extra round of r10 vintage).
+# iteration order under a bounded budget, so the entries listed here
+# come first. tools/gen_priority.py generates this window from the
+# CORRECTNESS_r*.json artifacts: new entries, then changed plans, then
+# the least recently certified.
 PRIORITY = [
     "image_header_dimensions",  # NEW
     "media_container_info",  # NEW

@@ -3,12 +3,12 @@
 Each reference scalar UDF (SURVEY.md §2.3 F1–F16) has a pure-expression
 equivalent here — JVM-side, codegen-friendly, null-safe. Submodules:
 
-- ``cleaning``  — F1–F7, F9, F11–F14 (timestamp cleanup, human-number
+- ``cleaning``  — F1, F2, F4–F7, F13 (timestamp cleanup, human-number
   parse, log buckets, URL keyword extraction, category lookup, …).
 - ``stable``    — cross-engine-deterministic numeric helpers (decimal
   sums, md5-derived hashes) used to make results bit-identical between
   Spark and a DuckDB oracle.
-- ``text``      — tokenization, n-grams/shingles, language-ID, quality
+- ``text``      — tokenization, n-grams, language-ID, quality
   scoring, token counting, fingerprinting.
 """
 
@@ -19,9 +19,6 @@ from datapipelinedemo_spark.functions.cleaning import (  # noqa: F401
     log2_bucket,
     keyword_from_url,
     keyword_to_category,
-    empty_sentinel_flag,
-    weighted_phrases,
-    weighted_sentiment,
     month_label,
 )
 from datapipelinedemo_spark.functions.stable import (  # noqa: F401

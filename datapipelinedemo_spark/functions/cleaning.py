@@ -113,27 +113,6 @@ def keyword_to_category(c, mapping: dict[str, str] | None = None) -> Column:
     return expr
 
 
-def empty_sentinel_flag(c) -> Column:
-    """F9 — 1 iff the phrase array is the ``["empty"]`` sentinel
-    (demo.py:145-154)."""
-    c = _col(c)
-    return F.when(c == F.array(F.lit("empty")), F.lit(1)).otherwise(F.lit(0))
-
-
-def weighted_phrases(phrases, weight) -> Column:
-    """F11 — the reference repeats the phrase list (weight+1) times
-    (demo.py:180-187). Materialized form, for parity tests only — the
-    aggregation layer folds the weight into the sum instead
-    (SURVEY.md §2.5 A1) and never builds this array.
-    """
-    return F.flatten(F.array_repeat(_col(phrases), (_col(weight) + F.lit(1)).cast("int")))
-
-
-def weighted_sentiment(sentiment, weight) -> Column:
-    """F12 — ``Sentiment * (Likes_log + 1)`` (demo.py:247-252)."""
-    return _col(sentiment) * (_col(weight) + F.lit(1)).cast("double")
-
-
 def month_label(prefix: str, year, month) -> Column:
     """F13 — ``"<prefix>_<Year>-<Month>"``, month NOT zero-padded, matching
     golden headers like ``Frequency_2018-1`` (demo.py:218,311,411,471)."""

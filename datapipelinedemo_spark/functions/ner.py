@@ -27,21 +27,14 @@ matches. No Python touches row data.
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Default dictionary location, overridable so the library isn't
-# path-coupled to one checkout: SPARK_GRAFT_NER_PATTERNS env var wins,
-# else the public reference asset's conventional location.
-PATTERNS_ENV = "SPARK_GRAFT_NER_PATTERNS"
+# The reference dictionary's location; ner_full_dictionary and its
+# DuckDB oracle both read it.
 REFERENCE_PATTERNS = "/root/reference/NER_model/entity_ruler/patterns.jsonl"
-
-
-def default_patterns_path() -> str:
-    return os.environ.get(PATTERNS_ENV, REFERENCE_PATTERNS)
 
 # spaCy-ish tokenization for dictionary matching: words (incl. digits)
 # or single punctuation marks; lowercased.
@@ -62,14 +55,10 @@ PATTERN_SCHEMA = T.StructType(
 )
 
 
-def load_pattern_rows(path: str | None = None) -> list[tuple]:
+def load_pattern_rows(path: str) -> list[tuple]:
     """Parse an entity_ruler patterns.jsonl (one JSON object per line:
     ``{"label": ..., "pattern": [{"LOWER": tok}, ...], "id": ...}``)
-    into (pattern, n_tokens, label, ent_id) tuples, deduplicated.
-
-    ``path=None`` resolves at CALL time via ``default_patterns_path``
-    (env-var override honored even when set after import)."""
-    path = path or default_patterns_path()
+    into (pattern, n_tokens, label, ent_id) tuples, deduplicated."""
     rows: dict[tuple, tuple] = {}
     with open(path) as f:
         for line in f:
@@ -95,9 +84,7 @@ def load_pattern_rows(path: str | None = None) -> list[tuple]:
     return list(rows.values())
 
 
-def pattern_table(
-    spark: SparkSession, path: str | None = None
-) -> DataFrame:
+def pattern_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.createDataFrame(load_pattern_rows(path), PATTERN_SCHEMA)
 
 

@@ -99,16 +99,6 @@ def word_token_count(c) -> Column:
     return F.regexp_count(_col(c), F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"))
 
 
-def char_shingles(c, k: int = 5) -> Column:
-    """All overlapping character k-grams (the MinHash shingle set).
-    Expression form: substring at every start position 1..len-k+1."""
-    name = _name(c)
-    return F.expr(
-        f"transform(sequence(1, greatest(length({name}) - {k - 1}, 0)),"
-        f" i -> substring({name}, i, {k}))"
-    )
-
-
 # Space-joined word n-grams over a token array live in
 # operators/decontamination.py::ngrams_of_tokens — one implementation,
 # one short-doc guard. ``ngrams`` above is the same shape for callers

@@ -99,17 +99,6 @@ def minhash_signature(shingle_col: str, num_hashes: int = 32) -> Column:
     )
 
 
-def with_minhash(
-    df: DataFrame, text: str, num_hashes: int = 32, k: int = 9,
-    hash: str = "md5",
-) -> DataFrame:
-    return (
-        df.withColumn("__sh", shingle_hashes(text, k, hash))
-        .withColumn("minhash", minhash_signature("__sh", num_hashes))
-        .drop("__sh")
-    )
-
-
 def lsh_candidate_pairs(
     df: DataFrame,
     id_col: str,

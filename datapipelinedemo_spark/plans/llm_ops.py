@@ -2621,12 +2621,13 @@ def ner_full_dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
     selectivity exercised at real scale (12,299 patterns, max 16
     tokens). Same output shape as ``ner_phrase_extraction``."""
     from datapipelinedemo_spark.functions.ner import (
+        REFERENCE_PATTERNS,
         extract_phrases,
         pattern_table,
     )
 
     docs = table(spark, sf_dir, "documents")
-    pats = pattern_table(spark)
+    pats = pattern_table(spark, REFERENCE_PATTERNS)
     out = extract_phrases(docs, "text", pats, "doc_id")
     return out.select(
         "doc_id", F.explode("All_phrases").alias("phrase")

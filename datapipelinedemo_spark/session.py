@@ -33,18 +33,14 @@ def default_parallelism() -> int:
 
 def get_spark(
     app_name: str = "datapipelinedemo-spark",
-    master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = default_parallelism()
-    master = master or f"local[{cpus}]"
-    sp = shuffle_partitions or int(
-        os.environ.get("SPARK_SQL_SHUFFLE_PARTITIONS", str(max(cpus, 8)))
-    )
+    sp = shuffle_partitions or max(cpus, 8)
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
+        .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(sp))
         .config("spark.default.parallelism", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")

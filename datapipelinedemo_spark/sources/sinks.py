@@ -13,12 +13,3 @@ from pyspark.sql import DataFrame
 
 def write_csv(df: DataFrame, path: str) -> None:
     df.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
-
-
-def write_parquet(
-    df: DataFrame, path: str, partition_by: list[str] | None = None
-) -> None:
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)

@@ -168,22 +168,3 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             "testdata generation changed?"
         )
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Session-intake helper: pins runtime confs (may be handed a
-    vanilla session), then loads every table."""
-    from datapipelinedemo_spark.session import ensure_runtime_confs
-
-    ensure_runtime_confs(spark)
-    return {name: table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so ``spark.sql`` plans can
-    reference them by name. Session-intake helper — pins runtime confs."""
-    from datapipelinedemo_spark.session import ensure_runtime_confs
-
-    ensure_runtime_confs(spark)
-    for name in TABLE_NAMES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -5,8 +5,6 @@ F4 error→0, F5 rounding, F1 short-form append, F6 regex no-match→null.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import functions as F
 
 from datapipelinedemo_spark.functions import cleaning as C
@@ -87,30 +85,10 @@ def test_keyword_to_category(spark):
                    None, None, None]
 
 
-def test_empty_sentinel_flag(spark):
-    df = spark.createDataFrame(
-        [(["empty"],), (["a"],), (["empty", "a"],), ([],)], "v array<string>"
-    )
-    out = [r[0] for r in df.select(C.empty_sentinel_flag("v")).collect()]
-    assert out == [1, 0, 0, 0]
-
-
-def test_weighted_phrases_repeat(spark):
-    df = spark.createDataFrame([(["a", "b"], 2)], "p array<string>, w int")
-    out = df.select(C.weighted_phrases("p", "w")).collect()[0][0]
-    assert out == ["a", "b"] * 3  # repeated (w+1) times (demo.py:180-187)
-
-
 def test_month_label_no_zero_pad(spark):
     df = spark.createDataFrame([(2018, 1)], "y int, m int")
     out = df.select(C.month_label("Frequency", "y", "m")).collect()[0][0]
     assert out == "Frequency_2018-1"
-
-
-def test_weighted_sentiment(spark):
-    df = spark.createDataFrame([(0.5, 3)], "s double, w int")
-    out = df.select(C.weighted_sentiment("s", "w")).collect()[0][0]
-    assert math.isclose(out, 2.0)
 
 
 def test_ngrams_edges(spark):

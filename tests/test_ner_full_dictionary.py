@@ -25,7 +25,7 @@ needs_dict = pytest.mark.skipif(
 
 @needs_dict
 def test_loader_shape():
-    rows = load_pattern_rows()
+    rows = load_pattern_rows(REFERENCE_PATTERNS)
     assert len(rows) == 12299
     assert max(r[1] for r in rows) == 16
     # every kept pattern in this dictionary carries an id
@@ -49,7 +49,7 @@ def test_full_dictionary_longest_match(spark):
     out = {
         r.id: r.All_phrases
         for r in extract_phrases(
-            df, "text", pattern_table(spark), "id"
+            df, "text", pattern_table(spark, REFERENCE_PATTERNS), "id"
         ).collect()
     }
     assert out[1] == ["Olive Oil", "Olive Tapenade", "Plain"]

@@ -1,9 +1,8 @@
-"""Partitioned writes + partition pruning: a filter on the partition
-column must prune directories at plan time, not scan-and-filter."""
+"""Column pruning and filter pushdown: a filtered projection must reach
+the parquet scan as a narrow ReadSchema and pushed filters."""
 
 from __future__ import annotations
 
-from datapipelinedemo_spark.sources.sinks import write_parquet
 from datapipelinedemo_spark.tables import table
 
 
@@ -11,23 +10,6 @@ def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
         df._jdf.queryExecution(), "formatted"
     )
-
-
-def test_partition_pruning(spark, sf_dir, tmp_path):
-    from pyspark.sql import functions as F
-
-    path = str(tmp_path / "events_by_type")
-    ev = table(spark, sf_dir, "events")
-    write_parquet(ev, path, partition_by=["event_type"])
-
-    re_read = spark.read.parquet(path)
-    q = re_read.filter(F.col("event_type") == "purchase").select("event_id")
-    plan = _plan(q)
-    assert "PartitionFilters" in plan
-    assert "purchase" in plan  # the literal reached the scan
-    # pruned read returns exactly the purchase rows
-    expected = ev.filter(F.col("event_type") == "purchase").count()
-    assert q.count() == expected
 
 
 def test_column_pruning_and_filter_pushdown(spark, sf_dir):

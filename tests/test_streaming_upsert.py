@@ -1,151 +1,8 @@
-"""foreachBatch keyed-upsert sink (streaming/upsert.py)."""
+"""Near-duplicate ingest streams over a stored index (streaming/dedup.py)."""
 
 from __future__ import annotations
 
-import datetime as dt
 import os
-
-from datapipelinedemo_spark.streaming.upsert import (
-    latest_per_key,
-    start_upsert_stream,
-)
-
-
-def _rows(*tuples):
-    return [
-        (uid, dt.datetime(2024, 1, 1, 0, 0, s), eid, v)
-        for (uid, s, eid, v) in tuples
-    ]
-
-
-SCHEMA = "user_id long, ts timestamp, event_id long, value double"
-
-
-def test_latest_per_key_tiebreak(spark):
-    # same ts for user 1 → higher event_id wins; replay-deterministic
-    df = spark.createDataFrame(
-        _rows((1, 5, 10, 1.0), (1, 5, 11, 2.0), (2, 3, 12, 3.0)), SCHEMA
-    )
-    out = {
-        r.user_id: (r.event_id, r.value)
-        for r in latest_per_key(df, ["user_id"], "ts", "event_id").collect()
-    }
-    assert out == {1: (11, 2.0), 2: (12, 3.0)}
-
-
-def test_upsert_stream_latest_value_wins(spark, tmp_path):
-    src = str(tmp_path / "src")
-    target = str(tmp_path / "target")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-
-    # batch 1: users 1, 2
-    spark.createDataFrame(
-        _rows((1, 1, 100, 10.0), (2, 2, 101, 20.0)), SCHEMA
-    ).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(
-        spark.read.parquet(src).schema
-    ).parquet(src)
-    q = start_upsert_stream(stream, target, ckpt, keys=["user_id"])
-    q.awaitTermination(120)
-
-    got = {
-        r.user_id: r.value for r in spark.read.parquet(target).collect()
-    }
-    assert got == {1: 10.0, 2: 20.0}
-
-    # batch 2: update user 1 (newer ts), insert user 3
-    spark.createDataFrame(
-        _rows((1, 9, 102, 99.0), (3, 4, 103, 30.0)), SCHEMA
-    ).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(
-        spark.read.parquet(src).schema
-    ).parquet(src)
-    q = start_upsert_stream(stream, target, ckpt, keys=["user_id"])
-    q.awaitTermination(120)
-
-    got = {
-        r.user_id: r.value for r in spark.read.parquet(target).collect()
-    }
-    assert got == {1: 99.0, 2: 20.0, 3: 30.0}
-
-
-def test_upsert_restart_is_idempotent(spark, tmp_path):
-    # re-running with the same checkpoint and no new data changes nothing
-    src = str(tmp_path / "src")
-    target = str(tmp_path / "target")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-    spark.createDataFrame(_rows((1, 1, 100, 10.0)), SCHEMA).write.mode(
-        "append"
-    ).parquet(src)
-    for _ in range(2):
-        stream = spark.readStream.schema(
-            spark.read.parquet(src).schema
-        ).parquet(src)
-        q = start_upsert_stream(stream, target, ckpt, keys=["user_id"])
-        q.awaitTermination(120)
-    got = {
-        r.user_id: r.value for r in spark.read.parquet(target).collect()
-    }
-    assert got == {1: 10.0}
-
-
-def test_upsert_publish_is_symlink_swap(spark, tmp_path):
-    """After any merge the table path is a symlink to a versioned dir
-    and exactly one version dir exists (superseded ones are swept) —
-    the publish step is a single atomic rename of the symlink."""
-    from datapipelinedemo_spark.streaming.upsert import (
-        merge_batch_into_parquet,
-    )
-
-    target = str(tmp_path / "t")
-    b1 = spark.createDataFrame(_rows((1, 1, 100, 10.0)), SCHEMA)
-    merge_batch_into_parquet(b1, target, ["user_id"], "ts", "event_id")
-    assert os.path.islink(target)
-    b2 = spark.createDataFrame(_rows((2, 2, 101, 20.0)), SCHEMA)
-    merge_batch_into_parquet(b2, target, ["user_id"], "ts", "event_id")
-    assert os.path.islink(target)
-    versions = [p for p in os.listdir(tmp_path) if "__v" in p]
-    assert len(versions) == 1  # old version swept on the next merge
-    got = {r.user_id: r.value for r in spark.read.parquet(target).collect()}
-    assert got == {1: 10.0, 2: 20.0}
-
-
-def test_upsert_recovers_interrupted_legacy_publish(spark, tmp_path):
-    """Crash window of the old rename-pair publish: target missing,
-    state stranded in _old. The next merge must restore it and keep
-    all prior keys instead of rebuilding from the batch alone."""
-    from datapipelinedemo_spark.streaming.upsert import (
-        merge_batch_into_parquet,
-    )
-
-    target = str(tmp_path / "t")
-    spark.createDataFrame(_rows((1, 1, 100, 10.0)), SCHEMA).write.parquet(
-        target + "_old"
-    )  # simulated: renamed aside, then crashed before the second rename
-    batch = spark.createDataFrame(_rows((2, 2, 101, 20.0)), SCHEMA)
-    merge_batch_into_parquet(batch, target, ["user_id"], "ts", "event_id")
-    got = {r.user_id: r.value for r in spark.read.parquet(target).collect()}
-    assert got == {1: 10.0, 2: 20.0}
-
-
-def test_upsert_migrates_legacy_real_dir(spark, tmp_path):
-    """A table written by the old layout (real directory, no symlink)
-    is merged into and republished as the symlink layout."""
-    from datapipelinedemo_spark.streaming.upsert import (
-        merge_batch_into_parquet,
-    )
-
-    target = str(tmp_path / "t")
-    spark.createDataFrame(_rows((1, 1, 100, 10.0)), SCHEMA).write.parquet(
-        target
-    )
-    batch = spark.createDataFrame(_rows((1, 9, 102, 99.0)), SCHEMA)
-    merge_batch_into_parquet(batch, target, ["user_id"], "ts", "event_id")
-    assert os.path.islink(target)
-    got = {r.user_id: r.value for r in spark.read.parquet(target).collect()}
-    assert got == {1: 99.0}
 
 
 def test_neardup_ingest_stream_two_batches(spark, tmp_path):
@@ -425,94 +282,6 @@ def test_redelivered_doc_emits_no_self_pairs(spark, tmp_path):
         (1, 2, "in_batch"),
         (1, 2, "vs_corpus"),
     }
-
-
-def test_compaction_preserves_stream_semantics(spark, tmp_path):
-    """Fold the ingest index's batch partitions (streaming/compact.py)
-    between runs: the resumed stream must produce EXACTLY the vs-corpus
-    pairs an uncompacted control run produces, and the folded rows must
-    live under batch_id=-1 with the newest batch partition carried."""
-    from datapipelinedemo_spark.streaming.compact import (
-        compact_ingest_index,
-    )
-    from datapipelinedemo_spark.streaming.dedup import (
-        start_neardup_ingest_stream,
-    )
-
-    dup_a = (
-        "the quick brown fox jumps over the lazy dog again and again "
-        "while the band plays the same nine char shingles throughout"
-    )
-    dup_b = (
-        "a second recurring passage about adaptive query execution and "
-        "broadcast hash joins repeated verbatim across ingest batches"
-    )
-    novel = (
-        "completely different content about parquet row groups and "
-        "shuffle partitions with no overlapping shingle material here"
-    )
-    doc_schema = "doc_id long, text string"
-    batches = [
-        [(1, dup_a), (2, novel)],
-        [(3, dup_b)],
-        [(4, dup_a)],          # post-maintenance batch: hits batch-0 rows
-        [(5, dup_b), (6, dup_a)],
-    ]
-
-    def run(tag, compact_after=None):
-        src = str(tmp_path / f"src_{tag}")
-        index_dir = str(tmp_path / f"idx_{tag}")
-        pairs_dir = str(tmp_path / f"pairs_{tag}")
-        ckpt = str(tmp_path / f"ckpt_{tag}")
-        os.makedirs(src)
-        for i, rows in enumerate(batches):
-            spark.createDataFrame(rows, doc_schema).write.mode(
-                "append"
-            ).parquet(src)
-            stream = spark.readStream.schema(doc_schema).parquet(src)
-            q = start_neardup_ingest_stream(stream, index_dir, pairs_dir, ckpt)
-            q.awaitTermination(120)
-            if compact_after is not None and i == compact_after:
-                audit = compact_ingest_index(
-                    spark, index_dir, target_bytes=1 << 30
-                )
-                assert audit["folded"], audit
-        return index_dir, {
-            (r.doc_a, r.doc_b, r.pair_type)
-            for r in spark.read.parquet(pairs_dir).collect()
-        }
-
-    _, control = run("control")
-    idx, compacted = run("compacted", compact_after=2)
-    assert compacted == control
-    assert {(4, 1, "vs_corpus"), (5, 3, "vs_corpus")} <= compacted
-    # layout: batches 0..1 folded to the seed partition (batch 2
-    # carried as the newest), later partitions appended by the
-    # resumed stream
-    names = sorted(
-        n for n in os.listdir(idx) if n.startswith("batch_id=")
-    )
-    assert "batch_id=-1" in names
-    assert "batch_id=0" not in names
-    # folded + appended rows all present
-    docs = {
-        r.doc for r in spark.read.parquet(idx).select("doc").collect()
-    }
-    assert docs == {1, 2, 3, 4, 5, 6}
-
-
-def test_compaction_noop_on_single_partition(spark, tmp_path):
-    from datapipelinedemo_spark.streaming.compact import (
-        compact_ingest_index,
-    )
-
-    idx = tmp_path / "idx"
-    (idx / "batch_id=0").mkdir(parents=True)
-    spark.createDataFrame([(1, "k")], "doc_id long, key string") \
-        .coalesce(1).write.mode("overwrite") \
-        .parquet(str(idx / "batch_id=0"))
-    audit = compact_ingest_index(spark, str(idx))
-    assert audit["folded"] == [] and "skipped" in audit
 
 
 def test_embedding_batch_pairs_cap_is_invisible_until_it_binds(spark, sf_dir):
