@@ -41,7 +41,7 @@ BROADCAST_OK: dict[str, str] = {}
 
 
 @pytest.fixture(scope="module")
-def hinted_plans(spark, sf_dir):
+def hinted_plans(spark, sf_dir, catalog_queries):
     """All catalog plans under autoBroadcastJoinThreshold=-1.
 
     Memo hygiene is load-bearing: a FrameMemo frame persist()-ed while
@@ -55,14 +55,14 @@ def hinted_plans(spark, sf_dir):
     override)."""
     from datapipelinedemo_spark.memo import clear_all_memos
 
-    import __spark_entry__ as e
-
     default = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     clear_all_memos()
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        qs = e.queries()
-        return {name: plan_string(fn(spark, sf_dir)) for name, fn in qs.items()}
+        return {
+            name: plan_string(fn(spark, sf_dir))
+            for name, fn in catalog_queries.items()
+        }
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", default)
         clear_all_memos()

@@ -47,12 +47,9 @@ SINGLE_PARTITION_WINDOW_OK = {
 
 
 @pytest.fixture(scope="module")
-def catalog_plans(spark, sf_dir):
-    import __spark_entry__ as e
-
-    qs = e.queries()
+def catalog_plans(spark, sf_dir, catalog_queries):
     out = {}
-    for name, fn in qs.items():
+    for name, fn in catalog_queries.items():
         out[name] = plan_string(fn(spark, sf_dir))
     return out
 

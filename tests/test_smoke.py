@@ -12,10 +12,9 @@ def test_entry_returns_rows(spark):
     assert "event_type" in df.columns
 
 
-def test_every_query_runs(spark, sf_dir):
-    qs = entrymod.queries()
-    assert qs, "catalog is empty"
-    for name, fn in qs.items():
+def test_every_query_runs(spark, sf_dir, catalog_queries):
+    assert catalog_queries, "catalog is empty"
+    for name, fn in catalog_queries.items():
         df = fn(spark, sf_dir)
         assert df.columns, name
         df.limit(5).collect()

@@ -71,8 +71,11 @@ def sync(repo: str = REPO) -> list[str]:
             driver_value is not None
             and abs(full.get("value", 0.0) - driver_value) > 1e-6
         ):
-            # should be impossible (same commit); refuse to write a
-            # fixture that would re-introduce the mismatch
+            # happened at r16 and r17: the 8-core scaling bench ran after
+            # the 32-core one and overwrote BENCH_LOCAL.json before the
+            # boundary commit. Such a round gets a hand-made fixture
+            # carrying an `accept_value_mismatch` note; refuse to write
+            # one that would re-introduce the mismatch silently
             print(
                 f"r{nn:02d}: git blob total {full.get('value')} != driver "
                 f"parsed {driver_value} — NOT writing; investigate"
