@@ -1,13 +1,11 @@
 """Parity shims for the reference's dead / moot-by-design code paths
-(SURVEY.md §2 S3, F14, F15) — implemented so the operator inventory is
+(SURVEY.md §2 F14, F15) — implemented so the operator inventory is
 complete even where the rebuild's architecture made the original
 unnecessary. Each is a native expression (no Python row UDFs); the
 docstrings record why the main pipelines never need them.
 """
 
 from __future__ import annotations
-
-import pickle
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -51,17 +49,3 @@ def pair_reversed(pair_col: str | Column) -> Column:
     c = F.col(pair_col) if isinstance(pair_col, str) else pair_col
     return F.array(c.getItem(1), c.getItem(0))
 
-
-def pickle_column_sink(df: DataFrame, column: str, path: str) -> int:
-    """S3 — the commented-out keyword-pickle sink (``demo.py:112-115``):
-    collect one column to the driver and ``pickle.dump`` the value
-    list. Kept for parity with the reference's debugging workflow;
-    this is BY DESIGN a driver-side sink for bounded columns (the
-    reference used it on the distinct-ish keyword column). At scale
-    the same need is served by ``df.select(column).write.parquet`` —
-    do not point this at a corpus-sized column. Returns the number of
-    values written."""
-    values = [r[0] for r in df.select(column).collect()]  # bounded-collect: documented driver-side sink, bounded column by contract
-    with open(path, "wb") as handle:
-        pickle.dump(values, handle, protocol=pickle.HIGHEST_PROTOCOL)
-    return len(values)

@@ -58,27 +58,6 @@ def ngrams(tokens: Column, n: int) -> Column:
     )
 
 
-def normalize_text(c) -> Column:
-    """Corpus-cleaning normalization, pure regexp (JVM-side):
-
-    1. strip HTML/XML tags (``<...>``),
-    2. drop control characters (C0/C1 minus tab/newline, which become
-       spaces in step 3),
-    3. collapse all whitespace runs to single spaces, trim.
-
-    Unicode canonicalization (NFC/NFKC) is intentionally NOT done here:
-    Spark has no built-in normalizer, and a per-row Python UDF would
-    put every byte of a 100 TB corpus through Python. If required,
-    batch it through one Arrow ``mapInPandas`` stage
-    (``str.normalize('NFC')`` on the pandas series) at ingest — once,
-    not per query.
-    """
-    x = F.regexp_replace(_col(c), r"<[^>]*>", " ")
-    x = F.regexp_replace(x, r"[\x00-\x08\x0b\x0c\x0e-\x1f\x7f-\x9f]", "")
-    x = F.regexp_replace(x, r"\s+", " ")
-    return F.trim(x)
-
-
 def distinct_tokens_in_order(c) -> Column:
     """First-occurrence-ordered distinct tokens (the reference's F8
     applies a Python ``set()`` per tweet — demo.py:35; we keep the

@@ -10,13 +10,16 @@ historic ad-hoc ``dict[(app_id, sf_dir)]`` caches:
 - **stale source**: regenerating the source parquet mid-session kept
   serving frames derived from the previous file generation (the
   on-disk index tags already guard this with an ``m{mtime_ns}-s{size}``
-  key; the in-memory memos did not);
+  key; the in-memory memos did not), and a stamp in the key alone
+  would still keep the old generation's persisted frame for the
+  session;
 - **dead-session leak**: in a long-lived process cycling many
   SparkSessions, entries for stopped sessions were never evicted, so
   their persisted plans and the sessions they pin accumulated forever.
 
-``FrameMemo`` + ``source_stamp`` fix both in one place: keys carry the
-source file fingerprint, and every access first evicts (and
+``FrameMemo`` + ``source_stamp`` fix both in one place: keys end with
+the source file fingerprint, a miss under a new fingerprint unpersists
+the generation it supersedes, and every access first evicts (and
 best-effort unpersists) entries whose owning session has stopped.
 """
 
@@ -90,8 +93,12 @@ class FrameMemo:
 
     ``build()`` is expected to return an already-``persist()``-ed
     frame (or one served from a disk index, where persist is moot).
-    Callers should include a ``source_stamp`` in ``key`` whenever the
-    frame derives from files that can be regenerated.
+
+    The LAST element of ``key`` must be the ``source_stamp`` (or
+    ``table_stamp``) of the files the frame derives from: on a miss,
+    the session's entries whose key differs only in that last element
+    are superseded generations of the same frame, and are unpersisted
+    and dropped.
     """
 
     def __init__(self) -> None:
@@ -134,20 +141,21 @@ class FrameMemo:
             # re-pinned; training_corpus_pipeline_v3 5.5 s → 19-40 s.
             # Uncached branch recompute is the cheaper failure mode.
             return hit[1]
+        for k in [k for k in self._entries if k[:-1] == full[:-1]]:
+            self._drop(k)
         frame = build()
         self._entries[full] = (spark, frame)
         return frame
 
     def _evict_dead(self) -> None:
-        dead = [
-            k for k, entry in self._entries.items() if _stopped(entry[0])
-        ]
-        for k in dead:
-            entry = self._entries.pop(k)
-            try:
-                entry[1].unpersist()
-            except Exception:
-                pass  # session already gone — the leak is the JVM's to drop
+        for k in [k for k, e in self._entries.items() if _stopped(e[0])]:
+            self._drop(k)
+
+    def _drop(self, k: tuple) -> None:
+        try:
+            self._entries.pop(k)[1].unpersist()
+        except Exception:
+            pass  # session already gone — the leak is the JVM's to drop
 
     def __len__(self) -> int:  # introspection for tests
         return len(self._entries)

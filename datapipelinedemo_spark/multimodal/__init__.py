@@ -5,11 +5,10 @@ struct; per-item compute (decode, resize, feature-extract,
 frame-sample) runs in Arrow-batched ``mapInPandas`` so Python touches
 columnar batches, never rows. Format + dimension extraction is REAL
 (``parse_image_header`` byte-walks PNG IHDR / JPEG SOFn / GIF / BMP
-headers — zero codec deps, r16); only full PIXEL decoding remains
-stubbed in this container (no PIL/ffmpeg): ``decode=`` selects a
-deterministic fake featureizer and ``decode_real`` raises
-``NotImplementedError`` for pixel work — the Spark-side contract
-(schema, batching, partitioning) is real and tested either way.
+headers — zero codec deps, r16); there is no PIXEL decoder (it would
+need PIL/ffmpeg), so ``extract_features`` computes deterministic fake
+features — the Spark-side contract (schema, batching, partitioning) is
+real and tested either way.
 """
 
 from datapipelinedemo_spark.multimodal.media import (  # noqa: F401

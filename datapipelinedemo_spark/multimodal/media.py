@@ -85,10 +85,9 @@ def parse_image_header(
     b: bytes,
 ) -> tuple[str | None, int | None, int | None, int | None]:
     """``(format, width, height, bit_depth)`` parsed from raw image
-    bytes by pure byte-walking — zero codec dependencies (r16, closes
-    the ``decode_real`` seam for dimensions/format: PNG IHDR, JPEG
-    SOFn marker scan, GIF logical screen descriptor, BMP DIB header
-    are all plain struct fields). Unknown/garbage bytes return
+    bytes by pure byte-walking — zero codec dependencies (PNG IHDR,
+    JPEG SOFn marker scan, GIF logical screen descriptor, BMP DIB
+    header are all plain struct fields). Unknown/garbage bytes return
     ``(None, None, None, None)``; a recognized container whose
     dimension field is truncated returns the format with null dims."""
     if (
@@ -190,17 +189,6 @@ def parse_media_container(
             i += size
         return ("mp4", None, None, None, dur_ms, brand)
     return (None, None, None, None, None, None)
-
-
-def decode_real(content: bytes, kind: str):
-    """The PIXEL-decode seam. Format + dimensions no longer need it —
-    ``parse_image_header`` reads them dependency-free — so this seam
-    now covers only full pixel/sample decoding, which genuinely
-    requires PIL/ffmpeg (absent in this container by design)."""
-    raise NotImplementedError(
-        "pixel decoding requires PIL/ffmpeg, not present in this container;"
-        " format/dimension extraction is real — see parse_image_header"
-    )
 
 
 def extract_features(media: DataFrame, batch_hint: int | None = None) -> DataFrame:
@@ -482,18 +470,3 @@ def sample_frames(
             )
 
     return media.select("media_id", "content").mapInPandas(run, FRAME_SCHEMA)
-
-
-def resize_stub(media: DataFrame, max_bytes: int = 256) -> DataFrame:
-    """Image "resize" plumbing: truncate content to ``max_bytes`` and
-    update metadata — stands in for a PIL thumbnail inside the same
-    mapInPandas loop. Pure-expression here (truncation IS expressible
-    natively; a real resize would not be)."""
-    resized = F.expr(f"substring(content, 1, {max_bytes})")
-    return media.withColumn("content", resized).withColumn(
-        "meta",
-        F.struct(
-            F.col("meta.mime").alias("mime"),
-            F.octet_length(F.col("content")).cast("long").alias("n_bytes"),
-        ),
-    )

@@ -28,98 +28,6 @@ from pyspark.sql import functions as F
 from datapipelinedemo_spark.pin import pin
 
 
-def connected_components_star(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str = "id",
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_rounds: int = 30,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    O(log n) rounds regardless of graph diameter, where min-label
-    propagation needs diameter rounds. Same contract as
-    ``connected_components``: returns (id_col, comp) with comp = min
-    reachable node id.
-
-    Per round each operation is one groupBy (per-node min) + one join
-    (re-emit edges toward the minimum) — all JVM-side; the driver only
-    sees the convergence counter. Use this over ``connected_components``
-    when clusters can be long chains (entity-resolution graphs, link
-    graphs); near-dup clusters are near-cliques and don't need it.
-    """
-    e = (
-        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .transform(pin)  # narrow-pin: 16 B/row (u, v) — iterative lineage cut
-    )
-
-    def _large_star(df: DataFrame) -> DataFrame:
-        # per node u over ALL neighbors: m = min(N(u) ∪ {u});
-        # re-point every strictly larger neighbor at m
-        nbrs = df.unionByName(
-            df.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        m = nbrs.groupBy("u").agg(F.min("v").alias("__mv")).select(
-            "u", F.least(F.col("__mv"), F.col("u")).alias("m")
-        )
-        out = (
-            nbrs.join(m, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        return out.transform(pin)  # narrow-pin: 16 B/row (u, v) — iterative lineage cut
-
-    def _small_star(df: DataFrame) -> DataFrame:
-        # orient larger→smaller; per node u over its SMALLER neighbors
-        # N: m = min(N); connect u and every v ∈ N to m
-        o = df.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        m = o.groupBy("u").agg(F.min("v").alias("m"))
-        neighbor_edges = (
-            o.join(m, "u")
-            .filter(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        self_edges = m.select("u", F.col("m").alias("v"))
-        out = (
-            neighbor_edges.unionByName(self_edges)
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        return out.transform(pin)  # narrow-pin: 16 B/row (u, v) — iterative lineage cut
-
-    for _ in range(max_rounds):
-        after_large = _large_star(e)
-        after_small = _small_star(after_large)
-        # converged when the edge set is stable (star edges only)
-        changed = (
-            after_small.exceptAll(e).limit(1).count()
-            + e.exceptAll(after_small).limit(1).count()
-        )
-        e = after_small
-        if changed == 0:
-            break
-
-    # stars point every non-min node at its component min; left-join
-    # keeps singletons (and min nodes) mapped to themselves. In a
-    # converged star forest each node has exactly one outgoing edge.
-    labels = e.select(F.col("u").alias("__id"), F.col("v").alias("__m"))
-    return (
-        nodes.select(F.col(id_col).alias("__id"))
-        .join(labels, "__id", "left")
-        .select(
-            F.col("__id").alias(id_col),
-            F.coalesce(F.col("__m"), F.col("__id")).alias("comp"),
-        )
-    )
-
-
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
@@ -136,8 +44,7 @@ def connected_components(
     Raises if the graph has not converged after ``max_rounds`` (one
     round = one hop of label propagation, so rounds needed = graph
     diameter) — a silently truncated label set would be WRONG, not
-    approximate. For high-diameter graphs use
-    ``connected_components_star`` (O(log n) rounds).
+    approximate.
     """
     # undirected edge list, both directions, deduped once up front
     e = (
@@ -179,7 +86,6 @@ def connected_components(
     if not converged:
         raise RuntimeError(
             f"label propagation did not converge in {max_rounds} rounds "
-            "(graph diameter exceeds the cap) — raise max_rounds or use "
-            "connected_components_star"
+            "(graph diameter exceeds the cap) — raise max_rounds"
         )
     return labels.select(F.col("id").alias(id_col), "comp")

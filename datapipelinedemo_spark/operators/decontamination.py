@@ -52,13 +52,6 @@ def ngrams_of_tokens(tokens_col, n: int) -> Column:
     )
 
 
-def word_ngrams(text_col, n: int) -> Column:
-    """Inline tokenize + n-grams, for short texts / tests. Prefer
-    tokenizing into a column and ``ngrams_of_tokens`` on hot paths —
-    see that function's inlining note."""
-    return ngrams_of_tokens(tokenize(text_col), n)
-
-
 def contamination_counts(
     train: DataFrame,
     bench: DataFrame,

@@ -99,46 +99,6 @@ def minhash_signature(shingle_col: str, num_hashes: int = 32) -> Column:
     )
 
 
-def lsh_candidate_pairs(
-    df: DataFrame,
-    id_col: str,
-    text: str,
-    num_hashes: int = 32,
-    bands: int = 4,
-    k: int = 9,
-    shingles: DataFrame | None = None,
-    bucket_cap: int | None = 1024,
-    hash: str = "md5",
-) -> DataFrame:
-    """Banded-LSH candidate pairs: docs whose MinHash signatures agree
-    on at least one band of r = num_hashes/bands consecutive values.
-
-    Plan shape (the 100 TB path): signature is computed per row
-    (no shuffle), bands explode ×bands, then ONE shuffle on
-    (band, band-key) groups candidates; the pair join happens only
-    inside buckets. Output: distinct (id_a < id_b) pairs.
-
-    Hot-bucket bound: web crawls have pathologically common signatures
-    (boilerplate / near-constant docs), and an uncapped bucket means one
-    k² task and one OOM. With ``bucket_cap`` = c, docs in a bucket are
-    ranked by id (window over the same shuffle partitioning — no extra
-    exchange) and
-      * the first c docs expand all-pairs in-row (≤ C(c,2) per bucket);
-      * every doc past the cap emits ONE pair with the bucket's minimum
-        doc (star expansion) — per-task memory is O(c), output is
-        O(n·c) per bucket instead of O(n²), and duplicate-cluster
-        connectivity is preserved for union-find downstream (overflow
-        docs in a hot bucket are near-identical boilerplate, so the
-        star edges survive Jaccard verification together).
-    Buckets at or under the cap produce the identical pair set as
-    ``bucket_cap=None`` (the uncapped path).
-    """
-    banded = banded_minhash(
-        df, id_col, text, num_hashes, bands, k, shingles, hash
-    )
-    return bucketed_candidate_pairs(banded, bucket_cap)
-
-
 def banded_minhash(
     df: DataFrame,
     id_col: str,
@@ -238,9 +198,20 @@ def bucketed_candidate_pairs(
     once (a self-join formulation recomputes it per side). Input
     frame: (doc, band, key). Output: distinct (doc_a < doc_b).
 
-    ``bucket_cap`` applies the hot-bucket bound documented on
-    ``lsh_candidate_pairs``: all-pairs for the first cap docs, star
-    expansion to the bucket minimum for the overflow.
+    Hot-bucket bound: web crawls have pathologically common signatures
+    (boilerplate / near-constant docs), and an uncapped bucket means one
+    k² task and one OOM. With ``bucket_cap`` = c, docs in a bucket are
+    ranked by id (window over the same shuffle partitioning — no extra
+    exchange) and
+      * the first c docs expand all-pairs in-row (≤ C(c,2) per bucket);
+      * every doc past the cap emits ONE pair with the bucket's minimum
+        doc (star expansion) — per-task memory is O(c), output is
+        O(n·c) per bucket instead of O(n²), and duplicate-cluster
+        connectivity is preserved for union-find downstream (overflow
+        docs in a hot bucket are near-identical boilerplate, so the
+        star edges survive Jaccard verification together).
+    Buckets at or under the cap produce the identical pair set as
+    ``bucket_cap=None`` (the uncapped path).
     """
     from datapipelinedemo_spark.operators.pairs import pair_combinations
 
@@ -338,8 +309,8 @@ def jaccard_verify(
     intersects *inside the row* (no shingle-level explode join — the
     all-pairs shingle self-join is quadratic in docs-per-shingle and
     melts down on repetitive corpora). This is the verification stage
-    after ``lsh_candidate_pairs``; the pair of hash-joins broadcasts
-    when the candidate set is small."""
+    after ``bucketed_candidate_pairs``; the pair of hash-joins
+    broadcasts when the candidate set is small."""
     if shingles is None:
         shingles = df.select(
             F.col(id_col).alias("doc"),
@@ -423,36 +394,6 @@ def containment_verify(
         "doc_b",
         F.col("ix").cast("long").alias("n_shared"),
         "containment",
-    )
-
-
-def neardup_pipeline(
-    df: DataFrame,
-    id_col: str,
-    text: str,
-    num_hashes: int = 32,
-    bands: int = 4,
-    k: int = 9,
-    threshold: float = 0.5,
-    bucket_cap: int | None = 1024,
-    hash: str = "md5",
-) -> DataFrame:
-    """The full near-dup pipeline: MinHash → banded LSH candidates →
-    exact Jaccard verification. One shuffle for the band grouping, two
-    hash joins for verification — the shape that survives 100 TB.
-
-    The shingle frame is computed once and cached (both the candidate
-    stage and the verification stage consume it; on a real cluster
-    you would checkpoint it to parquet instead of executor memory)."""
-    shingles = df.select(
-        F.col(id_col).alias("doc"), shingle_hashes(text, k, hash).alias("__sh")
-    ).persist()
-    cand = lsh_candidate_pairs(
-        df, id_col, text, num_hashes, bands, k,
-        shingles=shingles, bucket_cap=bucket_cap,
-    )
-    return jaccard_verify(
-        df, cand, id_col, text, k, threshold, shingles=shingles
     )
 
 

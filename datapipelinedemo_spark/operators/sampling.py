@@ -38,14 +38,6 @@ def _bucket(key: Column, salt: str) -> Column:
     return F.pmod(md5_long(s), F.lit(DENOM))
 
 
-def hash_mod_sample(
-    df: DataFrame, key_col: str, fraction: float, salt: str = "s0"
-) -> DataFrame:
-    """Keep a deterministic ~``fraction`` of rows keyed on ``key_col``."""
-    thr = round(fraction * DENOM)
-    return df.filter(_bucket(F.col(key_col), salt) < F.lit(thr))
-
-
 def stratified_hash_sample(
     df: DataFrame,
     key_col: str,

@@ -2,18 +2,14 @@
 
 AQE's skew-join splitting handles most runtime skew; salting is the
 explicit tool for *aggregation* hot keys (a single key whose group
-does not fit one task) and for joins where AQE can't help (e.g.
-broadcast impossible and one key dominates). Pattern:
-
-- salted aggregate: two-stage — partial agg on (key, salt), final agg
-  on key. Works for any decomposable aggregate (sum/count/min/max).
-- salted join: explode the small side ×buckets, salt the big side's
-  key with a deterministic hash — co-located without one giant task.
+does not fit one task). Pattern: two-stage aggregate — partial agg on
+(key, salt), final agg on key. Works for any decomposable aggregate
+(sum/count/min/max).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -49,24 +45,3 @@ def salted_sum_count(
         *[F.sum(f"__s_{c}").alias(alias) for c, alias in sum_cols.items()],
         F.sum("__cnt").alias("cnt"),
     )
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    big_key: str,
-    small_key: str,
-    buckets: int = 8,
-) -> DataFrame:
-    """Equi-join where ``big`` has hot keys and ``small`` is too large
-    to broadcast: salt the big side, replicate the small side ×buckets,
-    join on (key, salt). Shuffle volume for the small side grows
-    ×buckets — use only when a key genuinely overflows a task."""
-    b = big.withColumn(
-        "__salt", (F.xxhash64(*big.columns) % buckets + buckets) % buckets
-    )
-    s = small.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
-    )
-    cond = (b[big_key] == s[small_key]) & (b["__salt"] == s["__salt"])
-    return b.join(s, cond).drop("__salt")

@@ -30,7 +30,7 @@ _TOKS = r"list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')"
 
 
 def _grams_sql(n: int) -> str:
-    """DuckDB twin of operators.decontamination.word_ngrams."""
+    """DuckDB twin of operators.decontamination.ngrams_of_tokens."""
     return f"""
         CASE WHEN len(t) >= {n}
              THEN list_transform(generate_series(1, len(t) - {n - 1}),

@@ -17,7 +17,6 @@ from datapipelinedemo_spark.functions import text as TX
 from datapipelinedemo_spark.memo import FrameMemo, table_stamp
 from datapipelinedemo_spark.operators import dedup as DD
 from datapipelinedemo_spark.operators import similarity as SIM
-from datapipelinedemo_spark.session import session_key
 from datapipelinedemo_spark.plans.catalog import register
 from datapipelinedemo_spark.tables import table
 
@@ -2332,8 +2331,7 @@ def image_header_dimensions(spark: SparkSession, sf_dir: str) -> DataFrame:
     Next #7): dimensions and format live in plain struct fields of
     the container headers (PNG IHDR, JPEG SOFn, GIF, BMP), so
     ``multimodal.parse_image_header`` byte-walks them in an
-    Arrow-batched ``mapInPandas`` — the former ``decode_real``
-    NotImplementedError seam now covers only pixel decoding.
+    Arrow-batched ``mapInPandas``.
 
     Fixture + oracle: the container has no image files, so
     ``attach_synthetic_image_headers`` synthesizes byte-valid PNG /

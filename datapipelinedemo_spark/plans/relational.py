@@ -728,17 +728,9 @@ def two_level_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact| ≤ 3·rsd·exact + 1 — HLL++ at rsd 0.02 is inside 3σ with
 # overwhelming probability) that the DuckDB twin recomputes as TRUE
 # from the exact count. The exact count_distinct here is the
-# certification harness, not the scale path — the operative sketch is
-# ``approx_distinct_users_raw`` (also covered by pytest error bound).
+# certification harness, not the scale path — at scale the sketch
+# column alone is the operator.
 # --------------------------------------------------------------------------
-def approx_distinct_users_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.approx_count_distinct("user_id", 0.02).alias("approx_users"),
-        F.count(F.lit(1)).alias("events"),
-    )
-
-
 @register(
     "approx_distinct_users_per_type",
     oracle="""

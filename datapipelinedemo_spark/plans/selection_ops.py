@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 from datapipelinedemo_spark.memo import FrameMemo, table_stamp
 from datapipelinedemo_spark.plans.catalog import register
 from datapipelinedemo_spark.plans.corpus_ops import _TOKS, _grams_sql
-from datapipelinedemo_spark.session import session_key
 from datapipelinedemo_spark.tables import table
 
 _B = 4096            # feature-hash buckets (paper uses 10^4-ish)
@@ -111,31 +110,6 @@ def _dsir_weight6(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dsir_weights_for(
-    spark: SparkSession,
-    sf_dir: str,
-    target: str | F.Column | DataFrame | None = None,
-) -> DataFrame:
-    """DSIR importance weights with a CALLER-CHOSEN target domain
-    (VERDICT r7 "What's wrong" #3 — the operator API must not
-    hard-code the domain; only the catalog entry pins a constant).
-
-    ``target`` is either
-
-    - a boolean predicate over ``documents`` (SQL string or Column):
-      matching docs are the target sample, the REST are the raw
-      corpus to score (the pinned catalog form, default
-      ``source IN _TARGET_SOURCES``); or
-    - a DataFrame with a ``text`` column (an external domain sample —
-      the common production case): its grams train the target model
-      and the ENTIRE ``documents`` table is scored as raw.
-
-    Returns (doc_id, n_grams, log_weight). Custom targets skip the
-    catalog memo (its key pins the default-constant frame).
-    """
-    return _format_weights(_dsir_weight6_build(spark, sf_dir, target))
-
-
 def _format_weights(w: DataFrame) -> DataFrame:
     return w.select(
         "doc_id",
@@ -144,38 +118,15 @@ def _format_weights(w: DataFrame) -> DataFrame:
     )
 
 
-def _dsir_weight6_build(
-    spark: SparkSession,
-    sf_dir: str,
-    target: str | F.Column | DataFrame | None = None,
-) -> DataFrame:
+def _dsir_weight6_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datapipelinedemo_spark.functions.text import tokenize
     from datapipelinedemo_spark.operators.decontamination import (
         ngrams_of_tokens,
     )
 
-    docs = table(spark, sf_dir, "documents")
-    # normalize the target spec to one (doc_id, is_tgt, text) frame;
-    # external-sample rows carry doc_id NULL (they only feed the
-    # model counts, never the scored output)
-    if isinstance(target, DataFrame):
-        flagged = docs.select(
-            "doc_id", F.lit(False).alias("is_tgt"), "text"
-        ).unionByName(
-            target.select(
-                F.lit(None).cast("long").alias("doc_id"),
-                F.lit(True).alias("is_tgt"),
-                "text",
-            )
-        )
-    else:
-        if target is None:
-            pred = F.col("source").isin(*_TARGET_SOURCES)
-        elif isinstance(target, str):
-            pred = F.expr(target)
-        else:
-            pred = target
-        flagged = docs.select("doc_id", pred.alias("is_tgt"), "text")
+    flagged = table(spark, sf_dir, "documents").select(
+        "doc_id", F.col("source").isin(*_TARGET_SOURCES).alias("is_tgt"), "text"
+    )
     # tokenize into a REAL column before ngrams_of_tokens — feeding
     # the tokenize expression in directly would be inlined into the
     # per-position gram lambda and re-tokenize each doc ~once per
@@ -265,8 +216,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     looks more like the target domain than the average raw doc.
 
     See the module docstring for the paper, the exact-integer grid
-    strategy, and the broadcast-model scale shape; ``dsir_weights_for``
-    is the parameterized-target API this entry pins a constant of.
+    strategy, and the broadcast-model scale shape.
     """
     return _format_weights(_dsir_weight6(spark, sf_dir))
 

@@ -48,14 +48,12 @@ def enrich(tweets: DataFrame, patterns: DataFrame, lexicon: DataFrame) -> DataFr
     df = (
         tweets.withColumn("TweetDate", parse_timestamp_date(clean_timestamp("Timestamp")))
         .filter(F.col("TweetDate").isNotNull())
-        .withColumn("Comments", parse_human_number("Comments"))
         .withColumn("Likes", parse_human_number("Likes"))
         .withColumn("Retweets", parse_human_number("Retweets"))
         .withColumn("Likes_log", log2_bucket("Likes"))
         .withColumn("Retweets_log", log2_bucket("Retweets"))
         .withColumn("Year", F.year("TweetDate"))
         .withColumn("Month", F.month("TweetDate"))
-        .withColumn("Quarter", F.quarter("TweetDate"))
         .filter(F.col("Page_URL").isNotNull())
         .withColumn("Keyword", keyword_from_url("Page_URL"))
         .filter(F.col("Keyword").isNotNull())

@@ -408,23 +408,8 @@ def token_budget_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rank guarantee: approx_percentile(q, accuracy A) returns a data value
 # whose rank lies in [⌊(q−1/A)·n⌋, ⌈(q+1/A)·n⌉]. The query recomputes
 # that rank exactly (count ≤ / count <) and emits ``within_bounds``,
-# which the DuckDB twin recomputes as TRUE. Raw sketch output stays in
-# ``approx_value_percentiles_raw`` (pytest pins the tolerance).
+# which the DuckDB twin recomputes as TRUE.
 # --------------------------------------------------------------------------
-def approx_value_percentiles_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``approx_percentile`` per event type (p50/p90/p99, accuracy
-    10000) — the sketch path for quantiles over data too large to
-    sort. Map-side sketch merge: one partial-agg shuffle, same shape
-    as any aggregate.
-    """
-    ev = table(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.expr(
-            "approx_percentile(value, array(0.5, 0.9, 0.99), 10000)"
-        ).alias("approx_pcts")
-    )
-
-
 @register(
     "approx_value_percentiles",
     oracle="""

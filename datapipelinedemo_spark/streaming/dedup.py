@@ -1,36 +1,18 @@
-"""Streaming deduplication with bounded state.
+"""Streaming near-duplicate ingest over a stored index.
 
-Exactly-once-style ingest dedup for a training-data firehose: drop
-repeats of the same key arriving within the watermark delay. Plain
-``dropDuplicates`` on a stream keeps EVERY key forever — unbounded
-state, guaranteed OOM on a 100 TB firehose;
-``dropDuplicatesWithinWatermark`` expires each key's entry once the
-watermark passes it, so state is bounded by (arrival rate × delay).
-
-The contract (and why it is the right one for ingest): duplicates
-arriving within ``delay`` of the first copy are dropped; a copy
-arriving later than the watermark may be re-emitted — late-duplicate
-suppression beyond the horizon belongs to a batch compaction pass
-(operators/dedup.py), not to stream state.
+Each micro-batch is signed and banded (MinHash for text, hyperplane
+signs for embeddings), its candidate pairs are found against the
+stored banded index and within the batch, and the batch's own index
+rows are appended, so batch N+1 dedups against everything through
+batch N. Streaming state holds nothing: the "state" is the on-disk
+index, which the batch pipeline maintains anyway. The per-batch bodies
+(``neardup_batch_pairs``, ``embedding_batch_pairs``) are the certified
+batch twins that ``foreachBatch`` runs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def dedup_within_watermark(
-    events: DataFrame,
-    keys: list[str] | None = None,
-    ts_col: str = "ts",
-    delay: str = "2 hours",
-) -> DataFrame:
-    """Keep the first arrival per key; state for a key is dropped once
-    the event-time watermark moves ``delay`` past it."""
-    keys = keys or ["user_id", "event_type", ts_col]
-    return events.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(
-        keys
-    )
 
 
 def _read_index(spark, index_dir: str, batch_id: int) -> DataFrame | None:
@@ -71,34 +53,6 @@ def _read_index(spark, index_dir: str, batch_id: int) -> DataFrame | None:
     if "batch_id" in corpus.columns:
         corpus = corpus.filter(F.col("batch_id") != batch_id)
     return corpus
-
-
-def seed_ingest_index(frame: DataFrame, index_dir: str) -> None:
-    """Seed a streaming ingest index from a batch-built corpus frame
-    (``neardup_index``'s banded frame for the text stream,
-    ``ann_index.lsh_index``'s frame for the embedding stream) BEFORE
-    the first micro-batch.
-
-    Seeds must go through this helper, not a plain parquet copy: the
-    stream appends ``batch_id=N/`` partition subdirectories, so seed
-    part files sitting at the directory ROOT would give the next read
-    Spark's conflicting-directory-structures partition-discovery
-    failure. Writing the seed under ``batch_id=-1`` (a value
-    foreachBatch never produces) keeps the layout uniform and keeps
-    the replay exclusion (``batch_id != current``) meaningful for the
-    seeded rows — they are never mistaken for a crashed first batch.
-    """
-    from pyspark.sql import functions as F
-
-    if "batch_id" in frame.columns:
-        frame = frame.drop("batch_id")
-    (
-        frame.withColumn("batch_id", F.lit(-1))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(index_dir)
-    )
 
 
 def neardup_batch_pairs(
@@ -186,11 +140,7 @@ def start_neardup_ingest_stream(
     rows are appended to ``index_dir`` — so batch N+1 dedups against
     everything through batch N. This is the streaming twin of the
     batch ``incremental_dedup_candidates`` query and shares all its
-    operators and its stored-index row format (a batch-built
-    ``neardup_index`` banded frame can seed ``index_dir`` via
-    ``seed_ingest_index`` — never by copying part files to the
-    directory root, which would conflict with the stream's
-    ``batch_id=N/`` partition layout).
+    operators and its stored-index row format.
 
     State story at 100 TB: Spark streaming state holds NOTHING here —
     the "state" is the on-disk index, which is exactly the artifact
@@ -403,8 +353,7 @@ def start_embedding_ingest_stream(
     screen a production ingest runs before admitting a vector. Same
     replay contract as the near-dup text ingest (per-batch-id dynamic
     partition overwrite; the index read excludes the replaying
-    batch's own partition); a batch-built ``ann_index.lsh_index``
-    frame can seed ``index_dir`` via ``seed_ingest_index``.
+    batch's own partition).
     """
     from pyspark.sql import functions as F
 
@@ -446,70 +395,6 @@ def start_embedding_ingest_stream(
 
     return (
         vectors.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def start_es_screen_stream(
-    docs: DataFrame,
-    corpus_hashes: DataFrame,
-    spans_dir: str,
-    checkpoint_dir: str,
-    L: int | None = None,
-):
-    """Streaming exact-substring ADMISSION screen: every arriving
-    micro-batch of raw documents is L-gram hashed (only the batch —
-    ``operators.dedup.exact_substring_grams``), semijoined against the
-    corpus's distinct gram hashes, and its maximal duplicated spans
-    are appended to ``spans_dir`` keyed by batch id. The screen body
-    is the CERTIFIED batch twin's
-    (``plans.dedup_ext.es_screen_spans`` — the exact code object
-    ``exact_substring_batch_screen`` runs), so the stream inherits its
-    oracle row; the ``start_neardup_ingest_stream`` factoring applied
-    to exact-substring.
-
-    ``corpus_hashes`` is ONE distinct-hash projection of the stored
-    write-once gram index (``neardup_index.es_gram_index`` — the
-    corpus is never re-hashed); per trigger the cost is batch grams
-    hashed + one semijoin against that index + doc-grain island
-    windows, corpus-scale independent at a fixed admission rate.
-
-    Exactly-once: the checkpoint replays an unacknowledged batch; the
-    spans write is keyed by ``batch_id`` with dynamic partition
-    overwrite, so a replay overwrites its own partition instead of
-    duplicating it. The screen is read-only against the corpus index,
-    so there is no read-your-own-append hazard to exclude.
-    """
-    from pyspark.sql import functions as F
-
-    from datapipelinedemo_spark.operators.dedup import (
-        ES_L,
-        exact_substring_grams,
-    )
-    from datapipelinedemo_spark.plans.dedup_ext import es_screen_spans
-
-    L = ES_L if L is None else L
-
-    def _screen(batch: DataFrame, batch_id: int) -> None:
-        spans = es_screen_spans(
-            exact_substring_grams(batch, L), corpus_hashes
-        )
-        # an all-empty partitioned write leaves an unreadable dir (no
-        # part files to infer a schema from) — skip it; a replayed
-        # empty batch needs no cleanup either
-        if not spans.isEmpty():
-            (
-                spans.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(spans_dir)
-            )
-
-    return (
-        docs.writeStream.foreachBatch(_screen)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

@@ -3,77 +3,27 @@
 The built-in windows cover time-bucketed aggregation; this is the seam
 for semantics they can't express — here, a per-user running
 accumulator (count + sum + last-seen) that emits an updated snapshot
-every micro-batch and times out idle users via the processing-time
-timeout. The same grouped-pandas function shape scales: state lives in
-the state store, partitioned by key, nothing collects to the driver.
+every micro-batch. The same grouped-pandas function shape scales:
+state lives in the state store, partitioned by key, nothing collects
+to the driver. At 100 TB key cardinality, production runs add a
+timeout policy (idle keys emit a final snapshot and leave the store)
+and the RocksDB state-store provider.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
 # State keeps only primitives: a timestamp-typed state field
 # deadlocked the Spark 4.1 local state store during checkpoint commit;
-# epoch micros as LONG is equivalent and portable. (The
-# ProcessingTimeTimeout path itself WORKS — r10 root-caused the
-# earlier "hang" to processAllAvailable never returning, because the
-# engine keeps scheduling state-cleanup batches to fire expired
-# timers; harnesses must poll the sink, see
-# tests/test_skew_stateful.py::test_stateful_timeout_evicts_on_rocksdb.)
-STATE_SCHEMA = "n LONG, total DOUBLE, last_us LONG"
-OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_value", T.DoubleType()),
-    ]
-)
-
-
-def _update(key, pdfs: Iterator["pd.DataFrame"], state: GroupState):  # noqa: F821
-    import pandas as pd
-
-    n, total, last_us = 0, 0.0, 0
-    if state.exists:
-        n, total, last_us = state.get
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-        if len(pdf):
-            last_us = max(last_us, int(pdf["ts"].max().value // 1000))
-    state.update((n, total, last_us))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-    )
-
-
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """Streaming: per-user running (count, sum) snapshots. ``events``
-    must be a streaming frame with (user_id, ts, value). State is
-    bounded by key cardinality; at scale add a timeout policy (see
-    module docstring) and the RocksDB state store provider."""
-    return (
-        events.groupBy("user_id")
-        .applyInPandasWithState(
-            _update,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-# Exact-grid variant: the double accumulator above is order-dependent
-# (pandas sums in arrival order, an oracle can't reproduce it bit-for-
-# bit), so the certified path accumulates value on the 1e-4 integer
-# grid — each value floor-snaps independently (same IEEE ops as SQL
-# FLOOR(v*1e4+0.5) in Spark and DuckDB), and an int64 sum is
+# epoch micros as LONG is equivalent and portable.
+#
+# Value accumulates on the 1e-4 integer grid: a double sum in pandas is
+# order-dependent (arrival order, which an oracle can't reproduce
+# bit-for-bit), while each value floor-snaps independently (same IEEE
+# ops as SQL FLOOR(v*1e4+0.5) in Spark and DuckDB) and an int64 sum is
 # order-free. This is functions/stable.py's fixed-point rule applied
 # to streaming state.
 STATE_SCHEMA_EXACT = "n LONG, total4 LONG, last_us LONG"
@@ -116,10 +66,10 @@ def _update_exact(key, pdfs, state: GroupState):
 
 
 def running_user_totals_exact(events: DataFrame) -> DataFrame:
-    """``running_user_totals`` with the order-free integer-grid
-    accumulator — the oracle-certifiable form
-    (``streaming_stateful_user_totals`` in the catalog drives it
-    through a real multi-batch stream)."""
+    """Streaming: per-user running (count, grid sum) snapshots.
+    ``events`` must be a streaming frame with (user_id, ts, value).
+    The catalog's ``streaming_stateful_user_totals`` drives it through
+    a real multi-batch stream."""
     return events.groupBy("user_id").applyInPandasWithState(
         _update_exact,
         outputStructType=OUTPUT_SCHEMA_EXACT,
@@ -128,81 +78,3 @@ def running_user_totals_exact(events: DataFrame) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-# --------------------------------------------------------------------------
-# Eviction variant: ProcessingTimeTimeout + state.remove(). At 100 TB /
-# hundreds of millions of keys the NoTimeout form above grows state
-# without bound; production runs need BOTH a timeout policy (idle keys
-# emit a final "closed" snapshot and leave the store) and the RocksDB
-# state-store provider (state spills off-heap/disk instead of the
-# default HDFS-backed in-memory map). Both paths are pytest-driven
-# through a real multi-batch stream on the local provider
-# (tests/test_skew_stateful.py::test_stateful_timeout_evicts_on_rocksdb).
-# --------------------------------------------------------------------------
-EVICT_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_value4", T.LongType()),
-        T.StructField("closed", T.BooleanType()),
-    ]
-)
-
-
-def running_user_totals_evicting(
-    events: DataFrame, timeout_ms: int = 60_000
-) -> DataFrame:
-    """``running_user_totals_exact`` with idle-key eviction: a key
-    that receives no data for ``timeout_ms`` of processing time emits
-    one final snapshot with ``closed=true`` and its state is REMOVED —
-    if the key reappears later, its accumulator restarts from zero.
-    State stays primitive LONGs (a timestamp-typed state field
-    deadlocked the Spark 4.1 local state store during checkpoint
-    commit — module docstring)."""
-
-    def update(key, pdfs, state: GroupState):
-        import numpy as np
-        import pandas as pd
-
-        if state.hasTimedOut:
-            n, total4, _ = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value4": [total4],
-                    "closed": [True],
-                }
-            )
-            return
-        n, total4, last_us = 0, 0, 0
-        if state.exists:
-            n, total4, last_us = state.get
-        for pdf in pdfs:
-            n += len(pdf)
-            if len(pdf):
-                vals = pdf["value"].dropna().to_numpy(dtype="float64")
-                if len(vals):
-                    total4 += int(
-                        np.floor(vals * 1e4 + 0.5).astype("int64").sum()
-                    )
-                last_us = max(last_us, int(pdf["ts"].max().value // 1000))
-        state.update((n, total4, last_us))
-        state.setTimeoutDuration(timeout_ms)
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value4": [total4],
-                "closed": [False],
-            }
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=EVICT_OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA_EXACT,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )

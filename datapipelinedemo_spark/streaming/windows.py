@@ -20,25 +20,6 @@ def _maybe_watermark(df: DataFrame, enabled: bool, delay: str) -> DataFrame:
     return df.withWatermark("ts", delay) if enabled else df
 
 
-def tumbling_counts(
-    events: DataFrame,
-    width: str = "1 hour",
-    with_watermark: bool = False,
-    delay: str = "2 hours",
-) -> DataFrame:
-    df = _maybe_watermark(events, with_watermark, delay)
-    return (
-        df.groupBy(F.window("ts", width).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("event_count"), dec_sum("value", "sum_value"))
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "event_count",
-            "sum_value",
-        )
-    )
-
-
 def sliding_counts(
     events: DataFrame,
     width: str = "2 hours",

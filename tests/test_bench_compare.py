@@ -15,6 +15,8 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
@@ -193,6 +195,22 @@ def test_prev_full_round_boundary_mismatched_local(tmp_path):
     assert prev is not None
     assert prev.get("partial") is True
     assert path.endswith("#parsed")
+
+
+@pytest.mark.parametrize("note", [True, "see PR"])
+def test_prev_full_skips_mismatch_without_explanation(tmp_path, note):
+    """A mismatched fixture is honoured only when its
+    ``accept_value_mismatch`` note explains itself in more than 40
+    characters; a bare ``true`` or a short note is skipped as stale."""
+    sandbox, full = _boundary_sandbox(tmp_path)
+    fixture = dict(full, value=full["value"] + 5.0, accept_value_mismatch=note)
+    rounds = os.path.join(sandbox, "fixtures", "bench_rounds")
+    os.makedirs(rounds)
+    with open(os.path.join(rounds, "r15.json"), "w") as fh:
+        json.dump(fixture, fh)
+    path, prev = bench._prev_full(sandbox)
+    assert path == "BENCH_LOCAL.json@worktree"
+    assert abs(prev["value"] - full["value"]) < 1e-6
 
 
 def test_prev_full_three_digit_round(tmp_path):

@@ -106,22 +106,3 @@ def test_ngrams_edges(spark):
     assert out[1].g2 == ["a b"] and out[1].g3 == []
     assert out[2].g2 == [] and out[2].g3 == []
     assert out[3].g2 == [] and out[3].g3 == []
-
-
-def test_normalize_text(spark):
-    from datapipelinedemo_spark.functions import text as TX
-
-    rows = [
-        ("<p>Hello <b>world</b></p>",),
-        ("tabs\tand\nnewlines\r\n  collapse",),
-        ("ctrl\x00chars\x1fgone\x85too",),
-        ("  already clean  ",),
-    ]
-    df = spark.createDataFrame(rows, ["text"]).withColumn(
-        "t", TX.normalize_text("text")
-    )
-    got = [r.t for r in df.collect()]
-    assert got[0] == "Hello world"
-    assert got[1] == "tabs and newlines collapse"
-    assert got[2] == "ctrlcharsgonetoo"
-    assert got[3] == "already clean"

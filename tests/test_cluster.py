@@ -32,33 +32,6 @@ def test_edge_direction_irrelevant(spark):
     assert got == {1: 1, 2: 1, 3: 1}
 
 
-def test_star_equals_label_propagation(spark):
-    """large-star/small-star must produce the same components as
-    min-label propagation on a long path (the high-diameter case it
-    exists for), a multi-cluster graph, and singletons."""
-    from datapipelinedemo_spark.operators.cluster import (
-        connected_components_star,
-    )
-
-    cases = [
-        (range(40), [(i, i + 1) for i in range(39)]),  # 40-node path
-        (range(1, 7), [(1, 2), (2, 3), (4, 5)]),
-        (range(8), [(0, 7), (7, 3), (1, 2), (5, 6)]),
-    ]
-    for node_ids, edges in cases:
-        nodes = spark.createDataFrame([(i,) for i in node_ids], "id long")
-        e = spark.createDataFrame(edges, "src long, dst long")
-        a = {
-            r.id: r.comp
-            for r in connected_components(nodes, e, max_rounds=50).collect()
-        }
-        b = {
-            r.id: r.comp
-            for r in connected_components_star(nodes, e).collect()
-        }
-        assert a == b, (a, b)
-
-
 def test_label_propagation_refuses_truncation(spark):
     """A diameter larger than max_rounds must raise, not silently
     return wrong labels."""
@@ -71,20 +44,3 @@ def test_label_propagation_refuses_truncation(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(nodes, e, max_rounds=5)
-
-
-def test_star_converges_fast_on_path(spark):
-    """On a 64-node path the star algorithm must converge in far fewer
-    rounds than the 63-hop diameter — cap it at 10 alternations."""
-    from datapipelinedemo_spark.operators.cluster import (
-        connected_components_star,
-    )
-
-    n = 64
-    nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
-    e = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "src long, dst long"
-    )
-    out = connected_components_star(nodes, e, max_rounds=10)
-    got = {r.id: r.comp for r in out.collect()}
-    assert got == {i: 0 for i in range(n)}

@@ -28,7 +28,6 @@ PKG = os.path.join(
 # the reviewed inventory. Adding a collect means adding it HERE with a
 # marker THERE.
 ALLOWED_SITES = {
-    "functions/compat.py": 1,  # pickle-column sink, bounded by contract
     "operators/decontamination.py": 1,  # Bloom bit positions <= m_bits
     "operators/prefix.py": 1,  # single row of sums
     "operators/similarity.py": 3,  # nlist seeds x2, nlist*dim sums

@@ -1,11 +1,8 @@
-"""Reference-parity shims (SURVEY §2 S3/F14/F15): positional struct
-access, pair reversal, and the pickle column sink reproduce the
-reference's dead/moot code paths with native expressions (and, for the
-sink, the exact pickle format)."""
+"""Reference-parity shims (SURVEY §2 F14/F15): positional struct
+access and pair reversal reproduce the reference's dead/moot code paths
+with native expressions."""
 
 from __future__ import annotations
-
-import pickle
 
 from pyspark.sql import functions as F
 
@@ -13,7 +10,6 @@ from datapipelinedemo_spark.functions.compat import (
     field_at,
     nested_item,
     pair_reversed,
-    pickle_column_sink,
 )
 
 
@@ -54,13 +50,3 @@ def test_pair_reversed_intended_semantics(spark):
     for r in got:
         assert r.r == r.builtin and r.r[0] in {"tonic", "cola"}
 
-
-def test_pickle_column_sink_roundtrip(spark, tmp_path):
-    df = spark.createDataFrame(
-        [("soda",), ("tonic",), (None,)], ["Keyword"]
-    )
-    path = str(tmp_path / "keywords.pickle")
-    n = pickle_column_sink(df, "Keyword", path)
-    assert n == 3
-    with open(path, "rb") as fh:
-        assert sorted(pickle.load(fh), key=str) == [None, "soda", "tonic"]

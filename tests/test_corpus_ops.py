@@ -4,16 +4,19 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from datapipelinedemo_spark.functions.text import tokenize
 from datapipelinedemo_spark.operators.decontamination import (
     contamination_counts,
-    word_ngrams,
+    ngrams_of_tokens,
 )
 
 
 def test_word_ngrams_basic(spark):
-    df = spark.createDataFrame(
-        [("a b c d",), ("x y",), ("",)], ["text"]
-    ).select(word_ngrams("text", 3).alias("g"))
+    df = (
+        spark.createDataFrame([("a b c d",), ("x y",), ("",)], ["text"])
+        .withColumn("toks", tokenize("text"))
+        .select(ngrams_of_tokens("toks", 3).alias("g"))
+    )
     rows = [r.g for r in df.collect()]
     assert rows[0] == ["a b c", "b c d"]
     assert rows[1] == []  # shorter than n → empty, not a descending sequence

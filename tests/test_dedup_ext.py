@@ -625,114 +625,6 @@ def test_exact_substring_batch_screen_planted(spark, tmp_path):
     assert got == {(0, 8, 7 + L)}
 
 
-def test_es_screen_stream_matches_batch_twin(spark, tmp_path):
-    """The exact-substring admission screen driven through a REAL
-    2-micro-batch stream (maxFilesPerTrigger=1) against the stored
-    gram index equals the certified batch twin
-    (``exact_substring_batch_screen``) — the foreachBatch body IS the
-    twin's ``es_screen_spans``, so this pins that the streamed drive
-    and the oracle-certified plan cannot drift apart."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pyspark.sql import functions as F
-
-    from datapipelinedemo_spark.operators.neardup_index import (
-        es_gram_index,
-    )
-    from datapipelinedemo_spark.plans.dedup_ext import (
-        _ES_L,
-        exact_substring_batch_screen,
-    )
-    from datapipelinedemo_spark.streaming.dedup import (
-        start_es_screen_stream,
-    )
-
-    L = _ES_L
-    run_a = " ".join(f"ra{i}" for i in range(L))
-    run_b = " ".join(f"rb{i}" for i in range(L))
-    batch_only = " ".join(f"bo{i}" for i in range(L))
-    uniq = lambda tag, n: " ".join(f"{tag}{i}" for i in range(n))
-    texts = {
-        # batch slice (doc_id % 10 == 0), spread over two micro-batches
-        0: f"{uniq('a', 7)} {run_a} {uniq('b', 5)}",  # b1: dup vs corpus
-        30: uniq("z", 60),                            # b1: unique
-        10: f"{uniq('c', 3)} {run_b}",                # b2: dup vs corpus
-        20: batch_only,                               # b2: in-batch only
-        # corpus slice
-        1: f"{uniq('d', 3)} {run_a}",
-        2: f"{run_b} {uniq('e', 4)}",
-        3: batch_only,  # doc 3 % 10 != 0 -> corpus... wait
-    }
-    # doc 3 holds batch_only IN THE CORPUS, which would make doc 20 a
-    # real corpus dup — keep it truly batch-only instead
-    texts[3] = uniq("f", 60)
-    ids = sorted(texts)
-
-    def _tbl(keys):
-        return pa.table(
-            {
-                "doc_id": list(keys),
-                "text": [texts[i] for i in keys],
-                "lang": ["en"] * len(keys),
-                "source": ["s"] * len(keys),
-            }
-        )
-
-    pq.write_table(_tbl(ids), str(tmp_path / "documents.parquet"))
-    sf = str(tmp_path)
-    want = {
-        (r.doc_id, r.span_start, r.span_end, r.n_dup_positions,
-         r.span_tokens)
-        for r in exact_substring_batch_screen(spark, sf).collect()
-    }
-    assert {w[0] for w in want} == {0, 10}
-
-    src = tmp_path / "batch_stream"
-    src.mkdir()
-    pq.write_table(_tbl([0, 30]), str(src / "b1.parquet"))
-    pq.write_table(_tbl([10, 20]), str(src / "b2.parquet"))
-
-    corpus_h = (
-        es_gram_index(spark, sf, L)
-        .filter(F.col("doc_id") % 10 != 0)
-        .select("h")
-        .distinct()
-    )
-    docs = (
-        spark.readStream.schema(
-            "doc_id bigint, text string, lang string, source string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    spans_dir = str(tmp_path / "spans")
-    q = start_es_screen_stream(
-        docs, corpus_h, spans_dir, str(tmp_path / "ckpt"), L
-    )
-    try:
-        q.awaitTermination()
-        n_batches = len(
-            [p for p in q.recentProgress if p["numInputRows"] > 0]
-        )
-    finally:
-        q.stop()
-    assert n_batches == 2  # a genuine multi-micro-batch drive
-
-    got_df = spark.read.parquet(spans_dir)
-    got = {
-        (r.doc_id, r.span_start, r.span_end, r.n_dup_positions,
-         r.span_tokens)
-        for r in got_df.collect()
-    }
-    assert got == want
-    # both micro-batches flagged something -> two batch_id partitions
-    assert {r.batch_id for r in got_df.select("batch_id").collect()} == {
-        0,
-        1,
-    }
-
-
 def test_exact_substring_xxhash64_same_detection(spark, tmp_path):
     """The production-hash flag (VERDICT r12 next-round #6): swapping
     md5→hex→parse for the xxhash64 JVM intrinsic changes HASH VALUES

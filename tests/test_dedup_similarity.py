@@ -25,6 +25,19 @@ def _docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _shingles(docs, hash="md5"):
+    # the catalog's shape: one shingle frame feeds banding and verification
+    return docs.select(
+        F.col("doc_id").alias("doc"),
+        DD.shingle_hashes("text", 9, hash).alias("__sh"),
+    )
+
+
+def _candidates(docs, shingles, bucket_cap=1024):
+    banded = DD.banded_minhash(docs, "doc_id", "text", shingles=shingles)
+    return DD.bucketed_candidate_pairs(banded, bucket_cap)
+
+
 def test_exact_dedup(spark):
     out = DD.exact_dedup(_docs(spark), ["text"], "doc_id")
     kept = sorted(r.doc_id for r in out.collect())
@@ -32,7 +45,8 @@ def test_exact_dedup(spark):
 
 
 def test_lsh_finds_planted_neardups(spark):
-    pairs = DD.lsh_candidate_pairs(_docs(spark), "doc_id", "text").collect()
+    docs = _docs(spark)
+    pairs = _candidates(docs, _shingles(docs)).collect()
     got = {(r.doc_a, r.doc_b) for r in pairs}
     assert (1, 2) in got  # identical
     assert (1, 3) in got and (2, 3) in got  # near dup
@@ -52,17 +66,12 @@ def test_lsh_hot_bucket_cap(spark):
     ]
     df = spark.createDataFrame(hot + normal, "doc_id long, text string")
 
+    sh = _shingles(df)
     capped = {
-        (r.doc_a, r.doc_b)
-        for r in DD.lsh_candidate_pairs(
-            df, "doc_id", "text", bucket_cap=10
-        ).collect()
+        (r.doc_a, r.doc_b) for r in _candidates(df, sh, bucket_cap=10).collect()
     }
     uncapped = {
-        (r.doc_a, r.doc_b)
-        for r in DD.lsh_candidate_pairs(
-            df, "doc_id", "text", bucket_cap=None
-        ).collect()
+        (r.doc_a, r.doc_b) for r in _candidates(df, sh, bucket_cap=None).collect()
     }
 
     hot_ids = [d for d, _ in hot]
@@ -92,10 +101,12 @@ def test_xxhash64_path_finds_same_neardups(spark):
     based, so exact-dup pairs score 1.0 under either hash."""
     docs = _docs(spark)
     for h in ("md5", "xxhash64"):
+        sh = _shingles(docs, h)
+        cand = _candidates(docs, sh)
         out = {
             (r.doc_a, r.doc_b): r.jaccard
-            for r in DD.neardup_pipeline(
-                docs, "doc_id", "text", hash=h
+            for r in DD.jaccard_verify(
+                docs, cand, "doc_id", "text", shingles=sh
             ).collect()
         }
         assert (1, 2) in out and out[(1, 2)] == 1.0, h
@@ -105,10 +116,13 @@ def test_xxhash64_path_finds_same_neardups(spark):
 
 def test_jaccard_verify_scores(spark):
     docs = _docs(spark)
-    cand = DD.lsh_candidate_pairs(docs, "doc_id", "text")
+    sh = _shingles(docs)
+    cand = _candidates(docs, sh)
     out = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in DD.jaccard_verify(docs, cand, "doc_id", "text").collect()
+        for r in DD.jaccard_verify(
+            docs, cand, "doc_id", "text", shingles=sh
+        ).collect()
     }
     assert out[(1, 2)] == 1.0
     assert 0.5 < out[(1, 3)] < 1.0

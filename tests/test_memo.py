@@ -96,6 +96,8 @@ def test_frame_memo_source_stamp_key_rebuilds_on_regenerate(tmp_path):
     src.write_bytes(b"gen2-longer")
     f2 = memo.get_or_build(s, (source_stamp(str(src)),), _FakeFrame)
     assert f2 is not f1
+    # the superseded generation is released, not held for the session
+    assert len(memo) == 1 and f1.unpersisted and not f2.unpersisted
 
 
 def test_index_gc_reaps_orphaned_stale_dirs(tmp_path, monkeypatch):

@@ -141,20 +141,3 @@ def test_normalize_for_dedup_idempotent_and_clean(spark, vals):
         assert not any(ord(ch) < 0x20 and ch not in "\t\n\r" for ch in r.n1)
         assert "http://" not in r.n1 and "https://" not in r.n1
         assert r.n1 == r.n1.lower()
-
-
-@settings(max_examples=15, deadline=None)
-@given(st.lists(texty, min_size=1, max_size=30))
-def test_normalize_text_idempotent(spark, vals):
-    """The corpus cleaner is also a projection: stripping tags/ctrl
-    chars and collapsing whitespace twice equals doing it once."""
-    from datapipelinedemo_spark.functions.text import normalize_text
-
-    df = spark.createDataFrame([(v,) for v in vals], "v string")
-    out = df.select(
-        normalize_text("v").alias("n1"),
-        normalize_text(normalize_text("v")).alias("n2"),
-    ).collect()
-    for r in out:
-        assert r.n1 == r.n2
-        assert "\x00" not in r.n1 and "\t" not in r.n1

@@ -5,18 +5,20 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from datapipelinedemo_spark.operators.sampling import (
-    hash_mod_sample,
-    stratified_hash_sample,
-)
+from datapipelinedemo_spark.operators.sampling import stratified_hash_sample
+
+
+def _uniform_sample(df, fraction, salt="s0"):
+    # one rate for every row: the stratified sampler with no strata
+    return stratified_hash_sample(df, "k", "k", {}, default=fraction, salt=salt)
 
 
 def test_sample_is_deterministic_and_nested(spark):
     df = spark.range(10_000).withColumnRenamed("id", "k")
-    s10a = {r.k for r in hash_mod_sample(df, "k", 0.10).collect()}
-    s10b = {r.k for r in hash_mod_sample(df, "k", 0.10).collect()}
+    s10a = {r.k for r in _uniform_sample(df, 0.10).collect()}
+    s10b = {r.k for r in _uniform_sample(df, 0.10).collect()}
     assert s10a == s10b  # rerun-identical
-    s05 = {r.k for r in hash_mod_sample(df, "k", 0.05).collect()}
+    s05 = {r.k for r in _uniform_sample(df, 0.05).collect()}
     assert s05 <= s10a  # thresholds nest: 5% ⊂ 10%
     # rates land near nominal (md5 is uniform; 10k rows, loose bounds)
     assert 0.08 < len(s10a) / 10_000 < 0.12
@@ -25,8 +27,8 @@ def test_sample_is_deterministic_and_nested(spark):
 
 def test_salt_decorrelates(spark):
     df = spark.range(10_000).withColumnRenamed("id", "k")
-    a = {r.k for r in hash_mod_sample(df, "k", 0.10, salt="a").collect()}
-    b = {r.k for r in hash_mod_sample(df, "k", 0.10, salt="b").collect()}
+    a = {r.k for r in _uniform_sample(df, 0.10, salt="a").collect()}
+    b = {r.k for r in _uniform_sample(df, 0.10, salt="b").collect()}
     # independent 10% samples overlap ~1%, not ~10%
     assert len(a & b) < 0.03 * 10_000
 

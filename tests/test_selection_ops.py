@@ -1,4 +1,4 @@
-"""selection_ops — CCNet bucket-variant equivalence and DSIR.
+"""selection_ops — CCNet bucket-variant equivalence and domain-mixing weights.
 
 The threshold-path bucket split (``ccnet_buckets_by_threshold``) must
 be BIT-EQUAL to the NTILE twin, including tie splits at boundary
@@ -101,58 +101,6 @@ class TestCcnetThresholdEquivalence:
                 assert "doc_id" not in order, (
                     f"doc-grain per-language sort found: [{part}] [{order}]"
                 )
-
-
-class TestDsirTargetParameter:
-    def test_pinned_default_matches_catalog_entry(self, spark, sf_dir):
-        a = _rows(SO.dsir_importance_weights(spark, sf_dir))
-        b = _rows(SO.dsir_weights_for(spark, sf_dir))
-        assert a == b
-
-    def test_different_predicate_changes_weights_and_coverage(
-        self, spark, sf_dir
-    ):
-        from datapipelinedemo_spark.tables import table
-
-        alt = SO.dsir_weights_for(spark, sf_dir, target="source = 'src2'")
-        rows = {r["doc_id"]: r["log_weight"] for r in alt.collect()}
-        docs = table(spark, sf_dir, "documents")
-        raw_ids = {
-            r["doc_id"]
-            for r in docs.filter("source <> 'src2'").collect()
-        }
-        # every non-target doc with at least one bigram is scored,
-        # no target doc is
-        assert set(rows) <= raw_ids and len(rows) > 0
-        default = {
-            r["doc_id"]: r["log_weight"]
-            for r in SO.dsir_weights_for(spark, sf_dir).collect()
-        }
-        assert rows != default  # the target actually moved the model
-
-    def test_external_dataframe_target_equals_predicate_split(
-        self, spark, sf_dir, tmp_path
-    ):
-        """Exact cross-check of the two target forms: score a corpus
-        dir holding ONLY the raw docs against an external DataFrame of
-        the target docs — must reproduce the predicate form (which
-        splits one table) bit-for-bit."""
-        from datapipelinedemo_spark.tables import SCHEMAS, table
-
-        docs = table(spark, sf_dir, "documents")
-        pred = "source IN ('src0', 'src1')"
-        tgt_df = docs.filter(pred).select("text")
-        raw_only = docs.filter(f"NOT ({pred})")
-        spark.createDataFrame(
-            raw_only.collect(), SCHEMAS["documents"]
-        ).coalesce(1).write.mode("overwrite").parquet(
-            str(tmp_path / "documents.parquet")
-        )
-        via_pred = _rows(SO.dsir_weights_for(spark, sf_dir, target=pred))
-        via_frame = _rows(
-            SO.dsir_weights_for(spark, str(tmp_path), target=tgt_df)
-        )
-        assert via_pred == via_frame
 
 
 def test_temperature_mix_weights_flatten_toward_uniform(spark, sf_dir):

@@ -187,62 +187,6 @@ def test_neardup_ingest_replay_with_stale_index_is_clean(spark, tmp_path):
     shutil.rmtree(str(tmp_path / "ckpt2"))
 
 
-def test_seeded_index_first_batch_screens_and_appends(spark, tmp_path):
-    """ADVICE r6: a batch-built banded index must seed the streaming
-    ingest through seed_ingest_index (batch_id=-1 partition) — the
-    first streamed batch then screens against the seed, and the mixed
-    seed+batch layout stays readable (root-level seed part files would
-    hit Spark's conflicting-directory-structures failure)."""
-    from datapipelinedemo_spark.operators.dedup import banded_minhash
-    from datapipelinedemo_spark.streaming.dedup import (
-        seed_ingest_index,
-        start_neardup_ingest_stream,
-    )
-
-    src = str(tmp_path / "src")
-    index_dir = str(tmp_path / "idx")
-    pairs_dir = str(tmp_path / "pairs")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-    dup_text = (
-        "the quick brown fox jumps over the lazy dog again and again "
-        "while the band plays the same nine char shingles throughout"
-    )
-    other = (
-        "completely different content about parquet row groups and "
-        "shuffle partitions with no overlapping shingle material here"
-    )
-    corpus = spark.createDataFrame(
-        [(1, dup_text), (2, dup_text)], "doc_id long, text string"
-    )
-    seed_ingest_index(
-        banded_minhash(corpus, "doc_id", "text", 32, 4, 9), index_dir
-    )
-    assert os.path.isdir(os.path.join(index_dir, "batch_id=-1"))
-
-    # first STREAMED batch: doc 3 duplicates the seeded corpus text
-    spark.createDataFrame(
-        [(3, dup_text), (4, other)], "doc_id long, text string"
-    ).write.mode("append").parquet(src)
-    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    q = start_neardup_ingest_stream(stream, index_dir, pairs_dir, ckpt)
-    q.awaitTermination(120)
-
-    got = {
-        (r.doc_a, r.doc_b, r.pair_type)
-        for r in spark.read.parquet(pairs_dir).collect()
-    }
-    assert {(3, 1, "vs_corpus"), (3, 2, "vs_corpus")} <= got
-    # mixed seed + streamed layout reads uniformly; seed rows keep -1
-    idx = spark.read.parquet(index_dir)
-    by_doc = {
-        r.doc: r.batch_id
-        for r in idx.select("doc", "batch_id").distinct().collect()
-    }
-    assert by_doc[1] == -1 and by_doc[2] == -1
-    assert by_doc[3] == 0 and by_doc[4] == 0
-
-
 def test_redelivered_doc_emits_no_self_pairs(spark, tmp_path):
     """ADVICE r6: an at-least-once source re-delivering an
     already-indexed doc_id in a LATER batch must not emit a
